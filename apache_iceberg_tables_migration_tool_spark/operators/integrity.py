@@ -78,9 +78,12 @@ def checksum_df(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     )
 
 
-def table_checksum(df: DataFrame, cols: list[str] | None = None) -> Checksum:
-    row = checksum_df(df, cols).collect()[0]
+def _to_checksum(row) -> Checksum:
     return Checksum(n_rows=row["n_rows"], chk_sum=int(row["chk_sum"] or 0), chk_xor=row["chk_xor"] or 0)
+
+
+def table_checksum(df: DataFrame, cols: list[str] | None = None) -> Checksum:
+    return _to_checksum(checksum_df(df, cols).collect()[0])
 
 
 def row_diff(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -93,5 +96,13 @@ def row_diff(a: DataFrame, b: DataFrame) -> DataFrame:
 
 def tables_match(a: DataFrame, b: DataFrame) -> bool:
     """The reference's sample_match definition (counts ∧ checksum,
-    6_verify_data_integrity.py:83-87), hardened."""
-    return table_checksum(a) == table_checksum(b)
+    6_verify_data_integrity.py:83-87), hardened. Both sides' checksums
+    come from ONE action (the two one-row aggregates unioned, each
+    tagged with its side), not two. Columns hash by name, not
+    position: a reorder of the same columns alone still matches."""
+    names = sorted(set(a.columns))
+    if a.columns != b.columns and sorted(a.columns) == sorted(b.columns) == names:
+        b = b.select(*(F.col("`" + c.replace("`", "``") + "`") for c in a.columns))
+    sides = [checksum_df(df).withColumn("side", F.lit(i)) for i, df in enumerate((a, b))]
+    got = {r["side"]: _to_checksum(r) for r in sides[0].unionByName(sides[1]).collect()}
+    return got[0] == got[1]

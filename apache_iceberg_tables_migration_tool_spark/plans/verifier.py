@@ -2,13 +2,16 @@
 
 Reference stages 4+6 rebuilt:
 
-- schema comparison is a relational anti-join on (column, type) pairs
-  in both directions (J1) — and unlike the reference
-  (``4_verify_table_creation.py:86-97``) it compares *types*, not
-  just names, and partition specs;
+- schema comparison is a driver-side set difference of (column, type)
+  pairs in both directions — the reference's own approach
+  (``4_verify_table_creation.py:86-97``) except that it compares
+  *types* (``simpleString``, so nested struct fields count), not just
+  names, and partition specs too. A handful of column names is no
+  work for Spark: the distributed form (anti-joins, J1 in
+  ``queries/relational.py``) cost seven Spark jobs per table;
 - record counts come from snapshot manifests (metadata-only);
 - the data checksum is the hardened xxhash64 SUM(decimal)+BIT_XOR
-  combine (G5 fix) from operators.integrity.
+  combine (G5 fix) from operators.integrity, both sides in one action.
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from apache_iceberg_tables_migration_tool_spark.operators.integrity import table_checksum
+from apache_iceberg_tables_migration_tool_spark.operators.integrity import tables_match
 from apache_iceberg_tables_migration_tool_spark.plans.plan import MigrationPlan
 from apache_iceberg_tables_migration_tool_spark.sources.snapcat import SnapCatalog
 
@@ -41,22 +44,25 @@ VERIFY_SCHEMA = T.StructType(
 )
 
 
+def _schema_delta(a: T.StructType, b: T.StructType) -> list[tuple[str, str, str]]:
+    """(col_name, col_type, side) of every (name, type) pair present on
+    one side only — empty ⇔ schemas equivalent (column order ignored)."""
+    fa = {(f.name, f.dataType.simpleString()) for f in a.fields}
+    fb = {(f.name, f.dataType.simpleString()) for f in b.fields}
+    return [(n, t, "source_only") for n, t in sorted(fa - fb)] + [
+        (n, t, "target_only") for n, t in sorted(fb - fa)
+    ]
+
+
 def schema_diff(
     spark: SparkSession, a: T.StructType, b: T.StructType
 ) -> DataFrame:
-    """Columns present on one side only (name+type anti-join, both
-    directions) — empty ⇔ schemas equivalent."""
-    fa = [(f.name, f.dataType.simpleString()) for f in a.fields]
-    fb = [(f.name, f.dataType.simpleString()) for f in b.fields]
-    dfa = spark.createDataFrame(fa, "col_name string, col_type string")
-    dfb = spark.createDataFrame(fb, "col_name string, col_type string")
-    only_a = dfa.join(dfb, ["col_name", "col_type"], "left_anti").selectExpr(
-        "col_name", "col_type", "'source_only' AS side"
+    """The schema delta ``verify`` checks, as a DataFrame for
+    drill-down (col_name, col_type, side) — empty ⇔ schemas
+    equivalent."""
+    return spark.createDataFrame(
+        _schema_delta(a, b), "col_name string, col_type string, side string"
     )
-    only_b = dfb.join(dfa, ["col_name", "col_type"], "left_anti").selectExpr(
-        "col_name", "col_type", "'target_only' AS side"
-    )
-    return only_a.unionByName(only_b)
 
 
 def _verify_one(
@@ -72,7 +78,7 @@ def _verify_one(
         s_snap = s_tbl.resolve_snapshot(snapshot_id=entry.snapshot_id)
         d_snap = d_tbl.resolve_snapshot()
 
-        sch_ok = schema_diff(spark, s_tbl.schema(entry.snapshot_id), d_tbl.schema()).isEmpty()
+        sch_ok = not _schema_delta(s_tbl.schema(entry.snapshot_id), d_tbl.schema())
         part_ok = list(s_snap.partition_spec) == list(d_snap.partition_spec)
         # table properties must round-trip (the reference collects
         # them per table, 2_collect_database_schema_info.py:176-184)
@@ -81,9 +87,8 @@ def _verify_one(
         # two full count() scans, 6_verify_data_integrity.py:74-75)
         s_n, d_n = s_snap.total_records, d_snap.total_records
         cnt_ok = s_n == d_n
-        chk_ok = (
-            table_checksum(s_tbl.read(spark, snapshot_id=entry.snapshot_id))
-            == table_checksum(d_tbl.read(spark))
+        chk_ok = tables_match(
+            s_tbl.read(spark, snapshot_id=entry.snapshot_id), d_tbl.read(spark)
         )
         ok = sch_ok and part_ok and props_ok and cnt_ok and chk_ok
         status = "success" if ok else "mismatch"
@@ -111,12 +116,12 @@ def verify(
     schema/partition equivalence.
 
     Tables verify concurrently from a thread pool (same shape as
-    ``migrate``): each table's verification is a chain of small
-    independent read-only jobs (schema anti-join, two checksum scans),
-    so overlapping tables lets the next table's jobs back-fill the
-    executor slots the current one's tail leaves idle — the
-    stragglers-and-idle-capacity pattern. ``pool.map`` preserves plan
-    order, so the report rows are unchanged."""
+    ``migrate``): each table's verification is one small read-only
+    action (both checksum scans), so overlapping tables lets the next
+    table's jobs back-fill the executor slots the current one's tail
+    leaves idle — the stragglers-and-idle-capacity pattern.
+    ``pool.map`` preserves plan order, so the report rows are
+    unchanged."""
     if not plan.tables:
         return spark.createDataFrame([], VERIFY_SCHEMA)
     with ThreadPoolExecutor(max_workers=max_parallel_tables) as pool:

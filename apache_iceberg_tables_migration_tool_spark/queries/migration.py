@@ -2437,7 +2437,7 @@ def incremental_catalog_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit timestamps); the oracle recomputes the final row count
     from the band/delete predicates and pins the replay counts."""
     from apache_iceberg_tables_migration_tool_spark.operators.integrity import (
-        table_checksum,
+        tables_match,
     )
     from apache_iceberg_tables_migration_tool_spark.plans import sync_history
 
@@ -2467,7 +2467,7 @@ def incremental_catalog_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         s_tbl = src.table("db", "orders_sync")
         d_tbl = dst.table("db", "orders_sync")
-        chk = table_checksum(s_tbl.read(spark)) == table_checksum(d_tbl.read(spark))
+        chk = tables_match(s_tbl.read(spark), d_tbl.read(spark))
         hist = [
             (s.operation, s.committed_at) for s in s_tbl.main_chain()
         ] == [(s.operation, s.committed_at) for s in d_tbl.main_chain()]
@@ -2561,7 +2561,7 @@ def streaming_catalog_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; the oracle recomputes the surviving row count from the
     band/delete predicates."""
     from apache_iceberg_tables_migration_tool_spark.operators.integrity import (
-        table_checksum,
+        tables_match,
     )
     from apache_iceberg_tables_migration_tool_spark.streaming.pipelines import (
         maintain_sync,
@@ -2602,7 +2602,7 @@ def streaming_catalog_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain()
         s_tbl = src.table("db", "orders_ss")
         d_tbl = dst.table("db", "orders_ss")
-        chk = table_checksum(s_tbl.read(spark)) == table_checksum(d_tbl.read(spark))
+        chk = tables_match(s_tbl.read(spark), d_tbl.read(spark))
         hist = [
             (s.operation, s.committed_at) for s in s_tbl.main_chain()
         ] == [(s.operation, s.committed_at) for s in d_tbl.main_chain()]
@@ -2735,7 +2735,7 @@ def sql_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the final state relationally (full outer join with
     the matched/unmatched CASE + delete predicate)."""
     from apache_iceberg_tables_migration_tool_spark.operators.integrity import (
-        table_checksum,
+        tables_match,
     )
     from apache_iceberg_tables_migration_tool_spark.sources.sqlfront import (
         snapcat_dml,
@@ -2775,7 +2775,7 @@ def sql_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             snapcat_dml(spark, cat, delete_sql.format(tgt=tgt))
         cow = cat.table("db", "t_cow").read(spark)
         mor = cat.table("db", "t_mor").read(spark)
-        modes_match = table_checksum(cow) == table_checksum(mor)
+        modes_match = tables_match(cow, mor)
         out = cow.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("v").cast("long").alias("sum_v"),
@@ -2919,7 +2919,7 @@ def sql_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum-equal in-query; the oracle recomputes the applied
     changelog relationally."""
     from apache_iceberg_tables_migration_tool_spark.operators.integrity import (
-        table_checksum,
+        tables_match,
     )
     from apache_iceberg_tables_migration_tool_spark.sources.sqlfront import (
         snapcat_dml,
@@ -2958,7 +2958,7 @@ def sql_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise AssertionError(f"CDC apply on {tgt} was not one commit")
         cow = cat.table("db", "t_cow").read(spark)
         mor = cat.table("db", "t_mor").read(spark)
-        if table_checksum(cow) != table_checksum(mor):
+        if not tables_match(cow, mor):
             raise AssertionError("COW and MOR CDC application diverged")
         out = cow.agg(
             F.count(F.lit(1)).alias("n_rows"),

@@ -40,6 +40,20 @@ DEFAULT_CONF: dict[str, str] = {
     # the 10m default unless overridden per-join with broadcast()
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.ui.enabled": "false",
+    # Spark's default INT96 timestamps carry NO parquet min/max stats;
+    # int64 micros give manifests timestamp bounds, so time-range
+    # predicates prune (INT96 is deprecated in the parquet spec anyway).
+    # Session-wide, so snapcat's concurrent writes never flip it per
+    # write (sources.snapcat._timestamp_micros covers foreign sessions)
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Scans of explicit file lists (snapcat names every data file from
+    # its manifests, grouped by commit directory) stat those paths on
+    # the driver: above this many paths Spark lists them in a
+    # distributed job instead, which at the 32 default put listing
+    # jobs in front of every read of a wide commit (lineitem's 83
+    # l_shipmonth directories). The warehouse is POSIX, so driver
+    # listing is cheap at any size — never list through a job
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "2147483647",
     # Initial shuffle partition count — an UPPER bound under AQE
     # coalescing (advisory-size merging shrinks it per stage at
     # runtime). The local default (32 = the bench core count) keeps

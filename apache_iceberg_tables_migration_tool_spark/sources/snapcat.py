@@ -705,6 +705,48 @@ def _path_partition_stats(
     return out
 
 
+_TS_TYPE = "spark.sql.parquet.outputTimestampType"
+_ts_lock = threading.Lock()
+#: session uuid -> [writes in flight, value to restore] for sessions
+#: whose own timestamp type is not TIMESTAMP_MICROS
+_ts_overrides: dict[str, list] = {}
+
+
+@contextlib.contextmanager
+def _timestamp_micros(spark: SparkSession):
+    """Run a parquet write with TIMESTAMP_MICROS (int64) timestamps:
+    Spark's default INT96 carries NO parquet min/max stats, so time-
+    range predicates could not prune. Spark reads the type from the
+    session conf (no writer option overrides it). Engine sessions set
+    it in ``session.DEFAULT_CONF``, so this touches nothing; on a
+    foreign session the first write in flight sets it and the last
+    restores it. Writes run from thread pools (``migrate``,
+    ``upsert_mor``, corpus): a set/unset pair per write let one
+    thread's restore land while another planned its write."""
+    key = spark._jsparkSession.sessionUUID()
+    with _ts_lock:
+        held = _ts_overrides.get(key)
+        if held is not None:
+            held[0] += 1
+        else:
+            prev = spark.conf.get(_TS_TYPE, None)
+            if prev != "TIMESTAMP_MICROS":
+                spark.conf.set(_TS_TYPE, "TIMESTAMP_MICROS")
+                held = _ts_overrides[key] = [1, prev]
+    try:
+        yield
+    finally:
+        if held is not None:
+            with _ts_lock:
+                held[0] -= 1
+                if held[0] == 0:
+                    del _ts_overrides[key]
+                    if held[1] is None:
+                        spark.conf.unset(_TS_TYPE)
+                    else:
+                        spark.conf.set(_TS_TYPE, held[1])
+
+
 def _merge_append_schema(
     prev_schema: T.StructType, incoming: T.StructType, ident: str
 ) -> T.StructType:
@@ -3628,20 +3670,8 @@ class SnapCatalog:
         writer = df.write.mode("overwrite")
         if pcols:
             writer = writer.partitionBy(*pcols)
-        # Spark's default INT96 timestamps carry NO parquet min/max
-        # stats — write TIMESTAMP_MICROS (int64) so manifests get
-        # timestamp bounds and time-range predicates prune (INT96 is
-        # deprecated in the parquet spec anyway)
-        conf = df.sparkSession.conf
-        prev_tt = conf.get("spark.sql.parquet.outputTimestampType", None)
-        conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        try:
+        with _timestamp_micros(df.sparkSession):
             writer.parquet(commit_dir)
-        finally:
-            if prev_tt is None:
-                conf.unset("spark.sql.parquet.outputTimestampType")
-            else:
-                conf.set("spark.sql.parquet.outputTimestampType", prev_tt)
         new_files: list[DataFile] = []
         for dirpath, _dirs, fnames in os.walk(commit_dir):
             for fn in sorted(fnames):

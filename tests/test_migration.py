@@ -3,6 +3,8 @@ verification, report rollups, JSON interchange round-trip."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -96,6 +98,135 @@ def test_schema_diff_catches_type_change(spark):
     assert {(r["col_name"], r["side"]) for r in d} == {
         ("v", "source_only"), ("v", "target_only")
     }
+
+
+def _verify_pair(spark, tmp_path, src_df, dst_df):
+    """verify() row for one table written as ``src_df`` on the source
+    and ``dst_df`` on the target."""
+    src = SnapCatalog(str(tmp_path / "src_pair"))
+    dst = SnapCatalog(str(tmp_path / "dst_pair"))
+    src.write("db", "t", src_df, committed_at=T[0])
+    dst.write("db", "t", dst_df, committed_at=T[0])
+    return verify(spark, collect_plan(src), src, dst).collect()[0]
+
+
+@pytest.mark.parametrize(
+    "src_cols, dst_cols",
+    [
+        (["id", "CAST(id AS DOUBLE) AS v"], ["id", "CAST(id AS STRING) AS v"]),
+        (["id", "id AS v"], ["id", "id AS v", "id AS w"]),
+        (
+            ["id", "named_struct('a', CAST(id AS INT), 'b', 'x') AS s"],
+            ["id", "named_struct('a', id, 'b', 'x') AS s"],
+        ),
+    ],
+    ids=["type_change", "added_column", "nested_field_type"],
+)
+def test_verify_schema_mismatch(spark, tmp_path, src_cols, dst_cols):
+    base = spark.range(20)
+    row = _verify_pair(
+        spark, tmp_path, base.selectExpr(*src_cols), base.selectExpr(*dst_cols)
+    )
+    assert row["status"] == "mismatch"
+    assert row["schema_match"] is False
+    assert row["count_match"]
+
+
+def test_verify_column_reorder_alone_matches(spark, tmp_path):
+    base = spark.range(20).selectExpr("id", "CAST(id * 3 AS STRING) AS v")
+    row = _verify_pair(spark, tmp_path, base, base.select("v", "id"))
+    assert row["schema_match"] and row["checksum_match"]
+    assert row["status"] == "success"
+
+
+def test_schema_diff_names_nested_field_change(spark):
+    from pyspark.sql import types as Ty
+
+    a = Ty._parse_datatype_string("id bigint, s struct<a:int,b:string>")
+    b = Ty._parse_datatype_string("s struct<a:bigint,b:string>, id bigint")
+    d = schema_diff(spark, a, b).collect()
+    assert [(r["col_name"], r["col_type"], r["side"]) for r in d] == [
+        ("s", "struct<a:int,b:string>", "source_only"),
+        ("s", "struct<a:bigint,b:string>", "target_only"),
+    ]
+    assert schema_diff(spark, a, Ty.StructType(list(reversed(a.fields)))).isEmpty()
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), Spark jobs it launched in the default job group)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def test_verify_job_count_tripwire(spark, warehouses):
+    """Schemas compare on the driver and both checksums run as one
+    action, so a table costs at most 3 jobs (two shuffle map stages
+    and the result)."""
+    src, dst = warehouses
+    plan = collect_plan(src, as_of="2024-06-05T00:00:00+00:00")
+    migrate(spark, plan, src, dst, committed_at=T[5])
+    ver, n_jobs = _jobs_launched(spark, lambda: verify(spark, plan, src, dst))
+    assert all(r["status"] == "success" for r in ver.collect())
+    assert n_jobs <= 3 * len(plan.tables), n_jobs
+
+
+def test_wide_commit_scan_lists_files_on_driver(spark, tmp_path):
+    """Building the DataFrame over a commit directory with more files
+    than Spark's parallel-listing threshold (32) launches no job."""
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    df = spark.range(400).selectExpr("id", "CAST(id % 40 AS INT) AS p")
+    cat.write("db", "wide", df, partition_by=["p"], committed_at=T[0])
+    tbl = cat.table("db", "wide")
+    assert len(tbl.resolve_snapshot().files) > 32
+    read, n_jobs = _jobs_launched(spark, lambda: tbl.read(spark))
+    assert n_jobs == 0
+    assert read.count() == 400
+
+
+@pytest.mark.parametrize("own_type", [None, "INT96"], ids=["unset", "int96"])
+def test_concurrent_migrate_writes_micros_timestamps(spark, tmp_path, own_type):
+    """``migrate`` writes from a thread pool. On a session whose own
+    timestamp type is not TIMESTAMP_MICROS, every copied file must
+    still store int64 micros with min/max stats (one write's conf
+    restore must not land while another plans), and the session keeps
+    its own setting afterwards."""
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.outputTimestampType"
+    engine_default = spark.conf.get(key)
+    src = SnapCatalog(str(tmp_path / "src_ts"))
+    dst = SnapCatalog(str(tmp_path / "dst_ts"))
+    try:
+        if own_type is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, own_type)
+        for j in range(6):
+            src.write(
+                "db", f"t{j}",
+                spark.range(40).selectExpr("id", f"timestamp_seconds(id * 3600 + {j}) AS ts"),
+                committed_at=T[0],
+            )
+        plan = collect_plan(src)
+        rep = migrate(spark, plan, src, dst, max_parallel_tables=4, committed_at=T[1])
+        assert {r["status"] for r in rep.collect()} == {"success"}
+        assert spark.conf.get(key, None) == own_type
+    finally:
+        spark.conf.set(key, engine_default)
+    n_files = 0
+    for j in range(6):
+        tbl = dst.table("db", f"t{j}")
+        for f in tbl.resolve_snapshot().files:
+            pf = pq.ParquetFile(os.path.join(tbl.root, f.path))
+            i = pf.schema_arrow.get_field_index("ts")
+            assert pf.schema.column(i).physical_type == "INT64", f.path
+            assert pf.schema_arrow.field(i).type.unit == "us", f.path
+            for rg in range(pf.metadata.num_row_groups):
+                assert pf.metadata.row_group(rg).column(i).statistics.has_min_max, f.path
+            n_files += 1
+    assert n_files >= 6
 
 
 def test_report_rollup_has_grand_total(spark, warehouses):

@@ -2443,3 +2443,44 @@ def test_history_walks_parse_no_manifest_chunks(spark, cat, monkeypatch):
     assert all(s._files is None or s is mid for s in snaps if hasattr(s, "_files"))
     _ = mid.delete_files
     assert len(reads) == n_after_one  # same snapshot: no re-parse
+
+
+def test_timestamp_micros_override_stress(spark):
+    """Concurrent writes on a session whose own timestamp type is not
+    TIMESTAMP_MICROS: every write in flight sees MICROS, and the last
+    one out restores the session's value."""
+    import sys
+    import threading
+
+    from apache_iceberg_tables_migration_tool_spark.sources.snapcat import (
+        _timestamp_micros,
+    )
+
+    key = "spark.sql.parquet.outputTimestampType"
+    engine_default = spark.conf.get(key)
+    seen: list[str] = []
+    seen_lock = threading.Lock()
+
+    def writer():
+        for _ in range(20):
+            with _timestamp_micros(spark):
+                v = spark.conf.get(key)
+                with seen_lock:
+                    seen.append(v)
+
+    interval = sys.getswitchinterval()
+    try:
+        spark.conf.set(key, "INT96")
+        sys.setswitchinterval(1e-5)
+        threads = [threading.Thread(target=writer) for _ in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert len(seen) == 12 * 20
+        assert set(seen) == {"TIMESTAMP_MICROS"}
+        assert spark.conf.get(key) == "INT96"
+    finally:
+        sys.setswitchinterval(interval)
+        spark.conf.set(key, engine_default)
