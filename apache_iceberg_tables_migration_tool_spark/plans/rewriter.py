@@ -45,6 +45,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_iceberg_tables_migration_tool_spark.streaming.pipelines import (
+    join_watermark_names,
+)
+
 #: (fn, col, alias) aggregate requests the rewriter understands
 _FNS = ("count", "sum", "min", "max", "avg", "count_distinct")
 
@@ -181,13 +185,9 @@ def _base_exprs(aggs) -> list:
 
 def _join_view_fresh(catalog, s: dict, tables: list[tuple[str, str]]) -> bool:
     """A join/chain view is fresh iff EVERY member table's stored
-    watermark equals that table's current head. The 2-way refresher
-    names its watermarks ``ivm.src_a/b_snapshot_id``; the chain
-    refresher ``ivm.src_{i}_snapshot_id`` — positional either way."""
-    if "ivm.src_a_snapshot_id" in s:
-        names = ["ivm.src_a_snapshot_id", "ivm.src_b_snapshot_id"]
-    else:
-        names = [f"ivm.src_{i}_snapshot_id" for i in range(len(tables))]
+    watermark equals that table's current head; the watermarks are
+    positional, named by `pipelines.join_watermark_names`."""
+    names = join_watermark_names(s, len(tables))
     for (db, t), nm in zip(tables, names):
         head = catalog.table(db, t).current_snapshot()
         if head is None or s.get(nm) != str(head.snapshot_id):

@@ -817,26 +817,36 @@ def refresh_topk_view(
     return head.snapshot_id
 
 
-def _join_side_cols(
-    ta, tb, ha, hb, on: list[str], needed: list[str], who: str
-) -> tuple[list[str], list[str]]:
-    """Project each join side to the columns the view actually needs:
-    the join keys plus whichever non-key columns live on that side —
-    narrow time-travel scans, and :func:`~...operators.ivm.join_delta`'s
-    disjointness contract. Raises when a needed column exists on both
-    sides or neither."""
-    a_fields = set(ta.schema(snapshot_id=ha.snapshot_id).fieldNames())
-    b_fields = set(tb.schema(snapshot_id=hb.snapshot_id).fieldNames())
-    for c in needed:
-        if (c in a_fields) == (c in b_fields):
-            raise ValueError(
-                f"{who}: column {c!r} must exist on exactly one "
-                f"side of the join (in A: {c in a_fields}, in B: "
-                f"{c in b_fields}) — rename/project the sources first"
-            )
-    a_cols = list(on) + [c for c in needed if c in a_fields]
-    b_cols = list(on) + [c for c in needed if c in b_fields]
-    return a_cols, b_cols
+def _delta_key_probe(cl: DataFrame, k: str):
+    """Key summary of a changelog slice for pruning its partner's old
+    state on join key ``k``: None when the slice has no non-null keys
+    (inner-join null semantics: the term is empty), else ``(lo, hi,
+    keys)`` — ``keys`` the exact distinct key list when there are
+    ≤256 of them, else None (prune by the [lo, hi] range only).
+
+    ONE delta-sized job answers emptiness + bounds + (approximately)
+    "is the key set small": min/max double as the non-null-key probe.
+    The exact ≤256-key probe job (a limit-bounded collect, ≤257 rows
+    on the driver) runs ONLY when the approx distinct count says it
+    can pay off — a large delta (the common refresh after a bulk
+    append) skips it. The gate is approximate but SOUND: if it fires
+    spuriously the probe just overflows 257 and the range prune
+    stays; if it misses a genuinely small set only the isin
+    sharpening is lost, never correctness (rsd 5% ⇒ a true ≤256-key
+    set estimates well under the 384 gate)."""
+    stats = cl.agg(
+        F.min(k).alias("lo"),
+        F.max(k).alias("hi"),
+        F.approx_count_distinct(k).alias("nd"),
+    ).first()
+    if stats["lo"] is None:
+        return None
+    exact = None
+    if stats["nd"] <= 384:
+        probe = cl.select(k).where(F.col(k).isNotNull()).distinct().limit(257).collect()
+        if len(probe) <= 256:
+            exact = [r[k] for r in probe]
+    return stats["lo"], stats["hi"], exact
 
 
 def _old_state(
@@ -856,10 +866,9 @@ def _old_state(
     can't contain any delta key (the 100 TB shape: a day's delta
     against a clustered fact table reads the overlapping files,
     not the table) — plus an exact ``isin`` filter when the
-    delta's key set is small (probed with a limit-bounded
-    collect, ≤257 rows on the driver). Everything else falls back
-    to the plain time-travel read; when ``other_cl`` is None the
-    returned frame is never executed at all."""
+    delta's key set is small (:func:`_delta_key_probe`). Everything
+    else falls back to the plain time-travel read; when ``other_cl``
+    is None the returned frame is never executed at all."""
     from pyspark.sql import types as T
 
     def full():
@@ -870,56 +879,14 @@ def _old_state(
     k = on[0]
     if not isinstance(tbl.schema(snapshot_id=wm)[k].dataType, T.NumericType):
         return full()  # string footer stats may be truncated — no range trust
-    # ONE delta-sized job answers emptiness + bounds + (approximately)
-    # "is the key set small": min/max double as the non-null-key probe
-    # (lo is NULL ⇔ no non-null delta keys ⇔ inner join is empty).
-    # The exact ≤256-key probe job now runs ONLY when the approx
-    # distinct count says it can pay off — a large delta (the common
-    # refresh after a bulk append) skips it, halving the driver jobs
-    # this helper costs. The gate is approximate but SOUND: if it
-    # fires spuriously the probe just overflows 257 and we keep the
-    # range prune; if it misses a genuinely small set we only lose the
-    # isin sharpening, never correctness (rsd 5% ⇒ a true ≤256-key set
-    # estimates well under the 384 gate).
-    stats = other_cl.agg(
-        F.min(k).alias("lo"),
-        F.max(k).alias("hi"),
-        F.approx_count_distinct(k).alias("nd"),
-    ).first()
-    if stats["lo"] is None:
+    probe = _delta_key_probe(other_cl, k)
+    if probe is None:
         return full().limit(0)  # no non-null delta keys: nothing joins
+    lo, hi, exact = probe
     pruned = tbl.read_where(
-        spark, [(k, ">=", stats["lo"]), (k, "<=", stats["hi"])],
-        snapshot_id=wm,
+        spark, [(k, ">=", lo), (k, "<=", hi)], snapshot_id=wm,
     ).select(*cols)
-    if stats["nd"] <= 384:
-        probe = (
-            other_cl.select(k).where(F.col(k).isNotNull())
-            .distinct().limit(257).collect()
-        )
-        if len(probe) <= 256:
-            pruned = pruned.where(F.col(k).isin([r[k] for r in probe]))
-    return pruned
-
-
-def _old_states_parallel(
-    spark: SparkSession,
-    ta, wm_a: int, a_cols: list[str], cl_b: DataFrame | None,
-    tb, wm_b: int, b_cols: list[str], cl_a: DataFrame | None,
-    on: list[str],
-) -> tuple[DataFrame, DataFrame]:
-    """Both join sides' pruned old states, computed concurrently.
-
-    Each :func:`_old_state` call is an independent driver-blocking
-    chain (it materializes the OTHER side's changelog checkpoint and
-    runs a delta-sized stats agg), so submitting the two from a
-    2-thread pool overlaps their jobs on the cluster instead of
-    serializing them on the driver — actions are only sequential
-    because the driver calls them sequentially (guide §2.6)."""
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_a = pool.submit(_old_state, spark, ta, wm_a, a_cols, cl_b, on)
-        fut_b = pool.submit(_old_state, spark, tb, wm_b, b_cols, cl_a, on)
-        return fut_a.result(), fut_b.result()
+    return pruned if exact is None else pruned.where(F.col(k).isin(exact))
 
 
 def refresh_join_view(
@@ -940,152 +907,20 @@ def refresh_join_view(
 ) -> tuple[int, int] | None:
     """One incremental refresh of a grouped rollup over the inner
     equi-join ``A ⋈ B``, driven by BOTH sides' changelogs — the
-    two-table rung of the IVM ladder (single-table COUNT/SUM, MIN/MAX
-    and moments live in :func:`refresh_view_changelog`). Four view
-    kinds: ``sum_cols`` → COUNT/SUM; ``moment_cols`` → COUNT/Σv/Σv²
-    raw moments (derive AVG/VAR at read time with
-    :func:`~...operators.ivm.derive_stats`); ``distinct_col`` → the
-    counted per-(group, value) auxiliary (read COUNT(DISTINCT) or
-    exact quantiles off it) — all three self-maintainable under the
-    signed joined delta; ``minmax_cols`` → COUNT/MIN/MAX,
-    where a delete touching a group's extremum triggers
-    :func:`~...operators.ivm.apply_minmax_delta`'s affected-group
-    rescan with the NEW-state join as the rescan source — the ≤256
-    affected-key predicate pushes through the join into both scans
-    (Catalyst routes each group-key conjunct to the side that owns
-    the column), so the rescan re-joins only damaged groups. Exactly
-    one kind must be given. The joined delta comes from
-    :func:`~...operators.ivm.join_delta`'s bilinearity identity, so a
-    refresh joins only changed rows against the other side's
-    (time-travel) old state — never the two full new states — and
-    folds the signed result into the view with the same
-    aggregate-sized merge as the single-table path.
-
-    Watermarks for both sources ride in the view's own commit summary
-    (``ivm.src_a_snapshot_id`` / ``ivm.src_b_snapshot_id``), so
-    refresh + double watermark advance are one atomic commit: a
-    crashed or replayed refresh redoes the identical fold or no-ops.
-    The initial build joins the two heads directly. Appends, COW
-    upserts/deletes, MOR commits and rollbacks on EITHER side all
-    maintain the view exactly; compaction contributes nothing.
-
-    ``keys``/``sum_cols`` may come from either side (join keys in
-    ``on`` may also serve as group keys); every other referenced
-    column must exist on exactly one side — the standard disjointness
-    the join itself needs. Returns the (a, b) snapshot-id pair the
-    view now reflects, or None if there was nothing to fold. Raises
-    ``LookupError`` if a stored watermark has been expired from its
-    source's history."""
-    from apache_iceberg_tables_migration_tool_spark.operators import ivm
-
-    kinds = (sum_cols, moment_cols, minmax_cols,
-             [distinct_col] if distinct_col is not None else None)
-    if sum(k is not None for k in kinds) != 1:
-        raise ValueError(
-            "provide exactly one of sum_cols / moment_cols / minmax_cols / "
-            "distinct_col"
-        )
-    vcols = next(k for k in kinds if k is not None)
-    ta = catalog.table(a_database, a_table)
-    tb = catalog.table(b_database, b_table)
-    ha, hb = ta.current_snapshot(), tb.current_snapshot()
-    if ha is None or hb is None:
-        return None
-    vt = catalog.table(view_database, view_table)
-    wm_a = wm_b = None
-    if vt.exists() and vt.current_snapshot() is not None:
-        s = vt.current_snapshot().summary
-        if "ivm.src_a_snapshot_id" not in s or "ivm.src_b_snapshot_id" not in s:
-            raise ValueError(
-                f"{view_database}.{view_table} exists but carries no "
-                "ivm.src_a/b_snapshot_id watermarks — not a join-maintained "
-                "view; refusing to overwrite it"
-            )
-        wm_a = int(s["ivm.src_a_snapshot_id"])
-        wm_b = int(s["ivm.src_b_snapshot_id"])
-        if wm_a == ha.snapshot_id and wm_b == hb.snapshot_id:
-            return None  # already current
-
-    a_cols, b_cols = _join_side_cols(
-        ta, tb, ha, hb, on, [c for c in (*keys, *vcols) if c not in on],
-        "refresh_join_view",
+    two-table rung of the IVM ladder (single-table views live in
+    :func:`refresh_view_changelog`). This is
+    :func:`refresh_join_chain_view` with ``tables=[A, B]`` and
+    ``ons=[on]``, which documents the four aggregate view kinds
+    (exactly one of ``sum_cols`` / ``moment_cols`` / ``minmax_cols``
+    / ``distinct_col``), the column-ownership rules and the watermark
+    protocol. Returns the (a, b) snapshot-id pair the view now
+    reflects, or None if there was nothing to fold."""
+    return refresh_join_chain_view(
+        spark, catalog, [(a_database, a_table), (b_database, b_table)],
+        view_database, view_table, [on], keys, sum_cols=sum_cols,
+        moment_cols=moment_cols, minmax_cols=minmax_cols,
+        distinct_col=distinct_col,
     )
-
-    if wm_a is None:
-        a_new = ta.read(spark, snapshot_id=ha.snapshot_id).select(*a_cols)
-        b_new = tb.read(spark, snapshot_id=hb.snapshot_id).select(*b_cols)
-        joined = a_new.join(b_new, on)
-        if sum_cols is not None:
-            refreshed = ivm.grouped_aggregate(joined, keys, sum_cols)
-        elif moment_cols is not None:
-            refreshed = ivm.grouped_moments(joined, keys, moment_cols)
-        elif distinct_col is not None:
-            refreshed = ivm.grouped_distinct_aux(joined, keys, distinct_col)
-        else:
-            refreshed = ivm.grouped_minmax(joined, keys, minmax_cols)
-    else:
-        meta = ["_change_type"]
-        # localCheckpoint: each slice is delta-sized and consumed up to
-        # four times (key probe, bounds, two join terms) — materialize
-        # once instead of replaying the changelog per consumer
-        cl_a = (
-            ta.changelog(spark, wm_a, ha.snapshot_id)
-            .select(*a_cols, *meta).transform(pin)
-            if wm_a != ha.snapshot_id
-            else None
-        )
-        cl_b = (
-            tb.changelog(spark, wm_b, hb.snapshot_id)
-            .select(*b_cols, *meta).transform(pin)
-            if wm_b != hb.snapshot_id
-            else None
-        )
-        a_old, b_old = _old_states_parallel(
-            spark, ta, wm_a, a_cols, cl_b, tb, wm_b, b_cols, cl_a, on
-        )
-        jd = ivm.join_delta(cl_a, a_old, cl_b, b_old, on)
-        base = vt.read(spark)
-        if sum_cols is not None:
-            delta = ivm.agg_delta(jd, keys, sum_cols)
-            refreshed = ivm.apply_agg_delta(base, delta, keys, sum_cols)
-        elif moment_cols is not None:
-            delta = ivm.moments_delta(jd, keys, moment_cols)
-            refreshed = ivm.apply_moments_delta(base, delta, keys, moment_cols)
-        elif distinct_col is not None:
-            refreshed = ivm.apply_distinct_delta(base, jd, keys, distinct_col)
-        else:
-            # affected-group rescan source = the NEW-state join; the
-            # bounded affected-key predicate pushes through the join
-            # into both sides' scans, so only damaged groups re-join
-            a_new = ta.read(spark, snapshot_id=ha.snapshot_id).select(*a_cols)
-            b_new = tb.read(spark, snapshot_id=hb.snapshot_id).select(*b_cols)
-            refreshed = ivm.apply_minmax_delta(
-                base, jd, a_new.join(b_new, on), keys, minmax_cols
-            )
-    kind, kcols = next(
-        (kn, vc)
-        for kn, vc in (
-            ("sum", sum_cols), ("moments", moment_cols),
-            ("minmax", minmax_cols),
-            ("distinct", [distinct_col] if distinct_col is not None else None),
-        )
-        if vc is not None
-    )
-    catalog.write(
-        view_database, view_table, refreshed, mode="overwrite",
-        summary_extra={
-            "ivm.src_a_snapshot_id": str(ha.snapshot_id),
-            "ivm.src_b_snapshot_id": str(hb.snapshot_id),
-            "ivm.srcs": json.dumps(
-                [f"{a_database}.{a_table}", f"{b_database}.{b_table}"]
-            ),
-            "ivm.ons": json.dumps([on]),
-            "ivm.keys": json.dumps(keys),
-            "ivm.kind": kind,
-            "ivm.cols": json.dumps(kcols),
-        },
-    )
-    return (ha.snapshot_id, hb.snapshot_id)
 
 
 def maintain_join_view_changelog(
@@ -1107,35 +942,27 @@ def maintain_join_view_changelog(
     max_files_per_trigger: int | None = None,
     view_keep_last: int = 50,
 ):
-    """Streaming wrapper around :func:`refresh_join_view` — the
-    join-view twin of :func:`maintain_view_changelog`: a UNION of the
-    two sources' commit-marker feeds drives discovery, so a commit on
+    """Streaming wrapper around :func:`refresh_join_view` (through
+    :func:`maintain_join_chain_view_changelog`) — the join-view twin
+    of :func:`maintain_view_changelog`: a UNION of the two sources'
+    commit-marker feeds drives discovery, so a commit on
     EITHER side (including metadata-only MOR deletes, rollbacks and
     WAP publishes via their ``.pub`` markers) wakes a fold; every
     micro-batch folds both changelogs from the view's per-side
     watermarks to the current heads, so batching never changes the
     result and replays no-op. One synchronous refresh runs before the
     stream starts (pre-marker history + immediate freshness). View
-    kinds as in :func:`refresh_join_view`: exactly one of
-    ``sum_cols`` / ``moment_cols`` / ``minmax_cols``."""
+    kinds as in :func:`refresh_join_chain_view`: exactly one of
+    ``sum_cols`` / ``moment_cols`` / ``minmax_cols`` /
+    ``distinct_col``."""
     if checkpoint_dir is None:
         raise ValueError("checkpoint_dir is required")
-    kinds = dict(
+    return maintain_join_chain_view_changelog(
+        spark, catalog, [(a_database, a_table), (b_database, b_table)],
+        view_database, view_table, [on], keys, checkpoint_dir,
         sum_cols=sum_cols, moment_cols=moment_cols, minmax_cols=minmax_cols,
-        distinct_col=distinct_col,
-    )
-
-    def do_refresh():
-        return refresh_join_view(
-            spark, catalog, a_database, a_table, b_database, b_table,
-            view_database, view_table, on, keys, **kinds,
-        )
-
-    return _marker_feed_maintainer(
-        spark, catalog,
-        [catalog.table(a_database, a_table), catalog.table(b_database, b_table)],
-        do_refresh, view_database, view_table,
-        checkpoint_dir, max_files_per_trigger, view_keep_last,
+        distinct_col=distinct_col, max_files_per_trigger=max_files_per_trigger,
+        view_keep_last=view_keep_last,
     )
 
 
@@ -1155,101 +982,18 @@ def refresh_topk_join_view(
     k: int,
 ) -> tuple[int, int] | None:
     """One incremental refresh of a TOP-K-per-group view over the
-    inner equi-join ``A ⋈ B`` — the leaderboard completing the
-    join-view family (COUNT/SUM, moments, MIN/MAX, distinct/quantile
-    live in :func:`refresh_join_view`; the single-table leaderboard in
-    :func:`refresh_topk_view`). The joined delta comes from
-    :func:`~...operators.ivm.join_delta`'s bilinearity identity —
-    only changed rows ever join the other side's (time-travel,
-    key-pruned) old state — and folds with
-    :func:`~...operators.ivm.apply_topk_delta` in ``collapse="net"``
-    mode: a signed joined multiset has no commit order, and the same
-    joined row can carry several +/− entries that must cancel exactly
-    (both factor rows dying yields −1, −1, +1 = net −1).
-
-    A joined row's identity is COMPOSITE — pass ``id_cols`` covering
-    the finer side's primary key (e.g. ``["ok", "ln"]`` for
-    orders ⋈ lineitem); together with the group keys it must identify
-    each live joined row uniquely. Groups whose stored rows are
-    touched rescan from the NEW-state join, pruned by the bounded
-    affected-key predicate, which Catalyst pushes through the join
-    into both sides' scans — only damaged groups re-join.
-
-    Watermark protocol as :func:`refresh_join_view`
-    (``ivm.src_a/b_snapshot_id`` ride in the view's own commit, so
-    refresh + advance are atomic and replays no-op). Returns the
-    (a, b) snapshot-id pair the view now reflects, or None if nothing
-    to fold."""
-    from apache_iceberg_tables_migration_tool_spark.operators import ivm
-
-    ids = [id_cols] if isinstance(id_cols, str) else list(id_cols)
-    ta = catalog.table(a_database, a_table)
-    tb = catalog.table(b_database, b_table)
-    ha, hb = ta.current_snapshot(), tb.current_snapshot()
-    if ha is None or hb is None:
-        return None
-    vt = catalog.table(view_database, view_table)
-    wm_a = wm_b = None
-    if vt.exists() and vt.current_snapshot() is not None:
-        s = vt.current_snapshot().summary
-        if "ivm.src_a_snapshot_id" not in s or "ivm.src_b_snapshot_id" not in s:
-            raise ValueError(
-                f"{view_database}.{view_table} exists but carries no "
-                "ivm.src_a/b_snapshot_id watermarks — not a join-maintained "
-                "view; refusing to overwrite it"
-            )
-        wm_a = int(s["ivm.src_a_snapshot_id"])
-        wm_b = int(s["ivm.src_b_snapshot_id"])
-        if wm_a == ha.snapshot_id and wm_b == hb.snapshot_id:
-            return None  # already current
-    a_cols, b_cols = _join_side_cols(
-        ta, tb, ha, hb, on,
-        [c for c in (*keys, metric_col, *ids) if c not in on],
-        "refresh_topk_join_view",
+    inner equi-join ``A ⋈ B`` (the single-table leaderboard is
+    :func:`refresh_topk_view`): :func:`refresh_join_chain_view`'s
+    top-k kind with ``tables=[A, B]`` and ``ons=[on]``. A joined
+    row's identity is COMPOSITE — pass ``id_cols`` covering the finer
+    side's primary key (e.g. ``["ok", "ln"]`` for orders ⋈
+    lineitem). Returns the (a, b) snapshot-id pair the view now
+    reflects, or None if nothing to fold."""
+    return refresh_join_chain_view(
+        spark, catalog, [(a_database, a_table), (b_database, b_table)],
+        view_database, view_table, [on], keys,
+        metric_col=metric_col, id_cols=id_cols, k=k,
     )
-    a_new = ta.read(spark, snapshot_id=ha.snapshot_id).select(*a_cols)
-    b_new = tb.read(spark, snapshot_id=hb.snapshot_id).select(*b_cols)
-    if wm_a is None:
-        refreshed = ivm.grouped_topk(a_new.join(b_new, on), keys, metric_col, ids, k)
-    else:
-        meta = ["_change_type"]
-        cl_a = (
-            ta.changelog(spark, wm_a, ha.snapshot_id)
-            .select(*a_cols, *meta).transform(pin)
-            if wm_a != ha.snapshot_id
-            else None
-        )
-        cl_b = (
-            tb.changelog(spark, wm_b, hb.snapshot_id)
-            .select(*b_cols, *meta).transform(pin)
-            if wm_b != hb.snapshot_id
-            else None
-        )
-        a_old, b_old = _old_states_parallel(
-            spark, ta, wm_a, a_cols, cl_b, tb, wm_b, b_cols, cl_a, on
-        )
-        jd = ivm.join_delta(cl_a, a_old, cl_b, b_old, on)
-        refreshed = ivm.apply_topk_delta(
-            vt.read(spark), jd, a_new.join(b_new, on),
-            keys, metric_col, ids, k, collapse="net",
-        )
-    catalog.write(
-        view_database, view_table, refreshed, mode="overwrite",
-        summary_extra={
-            "ivm.src_a_snapshot_id": str(ha.snapshot_id),
-            "ivm.src_b_snapshot_id": str(hb.snapshot_id),
-            "ivm.srcs": json.dumps(
-                [f"{a_database}.{a_table}", f"{b_database}.{b_table}"]
-            ),
-            "ivm.ons": json.dumps([on]),
-            "ivm.keys": json.dumps(keys),
-            "ivm.kind": "topk",
-            "ivm.metric": metric_col,
-            "ivm.ids": json.dumps(ids),
-            "ivm.k": str(k),
-        },
-    )
-    return (ha.snapshot_id, hb.snapshot_id)
 
 
 def _df_key_pruned(df: DataFrame, cl: DataFrame | None, on: list[str]) -> DataFrame:
@@ -1266,27 +1010,26 @@ def _df_key_pruned(df: DataFrame, cl: DataFrame | None, on: list[str]) -> DataFr
     if cl is None or len(on) != 1:
         return df
     k = on[0]
-    # One delta-sized job answers emptiness + bounds + (approximately)
-    # key-set size — the exact ≤256-key probe runs only when the
-    # approx distinct count says it can pay off (same single-agg shape
-    # and soundness argument as _old_state: a spurious gate fire just
-    # overflows the probe; a miss only forgoes the isin sharpening).
-    # Bulk deltas — where the probe's distinct shuffle is priciest —
-    # now cost ONE job here instead of two.
-    stats = cl.agg(
-        F.min(k).alias("lo"),
-        F.max(k).alias("hi"),
-        F.approx_count_distinct(k).alias("nd"),
-    ).first()
-    if stats["lo"] is None:
+    probe = _delta_key_probe(cl, k)
+    if probe is None:
         return df.limit(0)  # no non-null delta keys: the term is empty
-    if stats["nd"] <= 384:
-        probe = (
-            cl.select(k).where(F.col(k).isNotNull()).distinct().limit(257).collect()
-        )
-        if len(probe) <= 256:
-            return df.where(F.col(k).isin([r[k] for r in probe]))
-    return df.where((F.col(k) >= stats["lo"]) & (F.col(k) <= stats["hi"]))
+    lo, hi, exact = probe
+    if exact is not None:
+        return df.where(F.col(k).isin(exact))
+    return df.where((F.col(k) >= lo) & (F.col(k) <= hi))
+
+
+def join_watermark_names(summary: dict, n: int) -> list[str]:
+    """The commit-summary names of an ``n``-table join view's
+    per-table watermarks: positional ``ivm.src_{i}_snapshot_id``.
+    Two-table views last committed by the earlier dedicated two-table
+    refreshers carry ``ivm.src_a_snapshot_id`` /
+    ``ivm.src_b_snapshot_id`` instead; those names are read (the
+    view refreshes and reports freshness as usual) and never written
+    — the next refresh re-stamps the view positionally."""
+    if n == 2 and "ivm.src_a_snapshot_id" in summary:
+        return ["ivm.src_a_snapshot_id", "ivm.src_b_snapshot_id"]
+    return [f"ivm.src_{i}_snapshot_id" for i in range(n)]
 
 
 def refresh_join_chain_view(
@@ -1301,10 +1044,13 @@ def refresh_join_chain_view(
     moment_cols: list[str] | None = None,
     minmax_cols: list[str] | None = None,
     distinct_col: str | None = None,
+    metric_col: str | None = None,
+    id_cols: list[str] | str | None = None,
+    k: int | None = None,
 ) -> tuple[int, ...] | None:
-    """One incremental refresh of a grouped rollup over an N-WAY join
-    chain ``T0 ⋈ T1 ⋈ … ⋈ Tn−1`` (star schemas included — step ``s``
-    joins the accumulated left side with ``tables[s+1]`` on
+    """One incremental refresh of a grouped view over an N-WAY join
+    chain ``T0 ⋈ T1 ⋈ … ⋈ Tn−1`` (n ≥ 2; star schemas included — step
+    ``s`` joins the accumulated left side with ``tables[s+1]`` on
     ``ons[s]``, whose key may live on ANY left table), driven by ALL
     sides' changelogs. The delta comes from composing the bilinearity
     identity with ITSELF: :func:`~...operators.ivm.join_delta` emits
@@ -1314,7 +1060,8 @@ def refresh_join_chain_view(
     2ⁿ−1 multilinear terms that each touch at least one delta. Work
     per term is O(changed rows × their matches): old-state factors
     never join each other without a delta bound somewhere in the
-    term, the per-table old scans are manifest-range-pruned against
+    term, the per-table old scans (both sides of the first step, the
+    right side of every later one) are manifest-range-pruned against
     their partner delta (:func:`_old_state`), accumulated old joins
     are key-pruned with exact ``isin``/range filters
     (:func:`_df_key_pruned`), and each intermediate delta is
@@ -1322,16 +1069,48 @@ def refresh_join_chain_view(
     next step's pruning probes, and must not replay the upstream
     delta join per consumer.
 
-    View kinds as :func:`refresh_join_view` (COUNT/SUM, raw moments,
-    COUNT/MIN/MAX with rescan-through-the-join, counted distinct
-    auxiliary); exactly one must be given. Non-key columns must each
-    exist on exactly one table; every ``ons[s]`` key must exist on
-    ``tables[s+1]`` and on exactly one of ``tables[0..s]``.
+    Five view kinds; exactly one must be given:
 
-    One watermark per table (``ivm.src_{i}_snapshot_id``) rides in
-    the view's own commit summary — refresh + N watermark advances
-    are one atomic commit, replays no-op. Returns the tuple of
-    snapshot ids the view now reflects, or None if nothing to fold."""
+    * ``sum_cols`` → COUNT/SUM;
+    * ``moment_cols`` → COUNT/Σv/Σv² raw moments (derive AVG/VAR at
+      read time with :func:`~...operators.ivm.derive_stats`);
+    * ``distinct_col`` → the counted per-(group, value) auxiliary
+      (read COUNT(DISTINCT) or exact quantiles off it);
+    * ``minmax_cols`` → COUNT/MIN/MAX;
+    * ``metric_col`` + ``id_cols`` + ``k`` → the top-k-per-group
+      leaderboard (the incremental top-k state of *Incremental Based
+      Framework for Efficient Top-K Similarity Search*, EDBT 2020),
+      folded by :func:`~...operators.ivm.apply_topk_delta` in
+      ``collapse="net"`` mode: a signed joined multiset has no commit
+      order, and the same joined row can carry several +/− entries
+      that must cancel exactly (both factor rows dying yields −1, −1,
+      +1 = net −1). ``id_cols`` together with the group keys must
+      identify each live joined row.
+
+    The first three are self-maintainable under the signed joined
+    delta and fold with the aggregate-sized merge of the single-table
+    path. MIN/MAX (a delete touching a group's extremum) and top-k (a
+    change touching a STORED row) rescan the affected groups from the
+    NEW-state join: the ≤256 affected-key predicate pushes through the
+    join into the member scans (Catalyst routes each group-key
+    conjunct to the table that owns the column), so only damaged
+    groups re-join. The initial build joins the heads directly.
+
+    ``keys`` and join keys in ``ons`` may serve as group keys; every
+    other referenced column must exist on exactly one table; every
+    ``ons[s]`` key must exist on ``tables[s+1]`` and on exactly one of
+    ``tables[0..s]``.
+
+    One watermark per table (``ivm.src_{i}_snapshot_id``, see
+    :func:`join_watermark_names`) rides in the view's own commit
+    summary together with the view's definition — refresh + N
+    watermark advances are one atomic commit, so a crashed or
+    replayed refresh redoes the identical fold or no-ops. Appends,
+    COW upserts/deletes, MOR commits and rollbacks on ANY member
+    maintain the view exactly; compaction contributes nothing.
+    Returns the tuple of snapshot ids the view now reflects, or None
+    if nothing to fold. Raises ``LookupError`` if a stored watermark
+    has been expired from its source's history."""
     from apache_iceberg_tables_migration_tool_spark.operators import ivm
 
     n = len(tables)
@@ -1339,14 +1118,22 @@ def refresh_join_chain_view(
         raise ValueError("refresh_join_chain_view needs at least two tables")
     if len(ons) != n - 1:
         raise ValueError(f"expected {n - 1} join-key lists, got {len(ons)}")
-    kinds = (sum_cols, moment_cols, minmax_cols,
-             [distinct_col] if distinct_col is not None else None)
-    if sum(k is not None for k in kinds) != 1:
+    ids = [id_cols] if isinstance(id_cols, str) else list(id_cols or [])
+    given = {
+        "sum": sum_cols, "moments": moment_cols, "minmax": minmax_cols,
+        "distinct": None if distinct_col is None else [distinct_col],
+        "topk": None if metric_col is None else [metric_col, *ids],
+    }
+    chosen = [kn for kn, vc in given.items() if vc is not None]
+    if len(chosen) != 1:
         raise ValueError(
             "provide exactly one of sum_cols / moment_cols / minmax_cols / "
-            "distinct_col"
+            "distinct_col / metric_col"
         )
-    vcols = next(k for k in kinds if k is not None)
+    kind = chosen[0]
+    vcols = given[kind]
+    if kind == "topk" and (not ids or k is None):
+        raise ValueError("a top-k view needs metric_col, id_cols and k")
 
     tbls = [catalog.table(db, t) for db, t in tables]
     heads = [t.current_snapshot() for t in tbls]
@@ -1356,11 +1143,11 @@ def refresh_join_chain_view(
     wms: list[int | None] = [None] * n
     if vt.exists() and vt.current_snapshot() is not None:
         s = vt.current_snapshot().summary
-        names = [f"ivm.src_{i}_snapshot_id" for i in range(n)]
+        names = join_watermark_names(s, n)
         if any(nm not in s for nm in names):
             raise ValueError(
                 f"{view_database}.{view_table} exists but carries no "
-                f"{names} watermarks — not a chain-maintained view; "
+                f"{names} watermarks — not a join-maintained view; "
                 "refusing to overwrite it"
             )
         wms = [int(s[nm]) for nm in names]
@@ -1373,7 +1160,7 @@ def refresh_join_chain_view(
         set(t.schema(snapshot_id=h.snapshot_id).fieldNames())
         for t, h in zip(tbls, heads)
     ]
-    all_on = {k for on_s in ons for k in on_s}
+    all_on = {c for on_s in ons for c in on_s}
     cols: list[dict] = [dict() for _ in range(n)]  # ordered col sets
     for c in (*keys, *vcols):
         if c in all_on:
@@ -1382,46 +1169,45 @@ def refresh_join_chain_view(
         if len(owners) != 1:
             raise ValueError(
                 f"refresh_join_chain_view: column {c!r} must exist on exactly "
-                f"one table (owners: {[tables[i] for i in owners]}) — "
-                "rename/project the sources first"
+                f"one table, i.e. on exactly one side of its join (owners: "
+                f"{[tables[i] for i in owners]}) — rename/project the sources "
+                "first"
             )
         cols[owners[0]][c] = True
     for s_i, on_s in enumerate(ons):
         right = s_i + 1
-        for k in on_s:
-            if k not in fields[right]:
+        for c in on_s:
+            if c not in fields[right]:
                 raise ValueError(
-                    f"refresh_join_chain_view: step-{s_i} key {k!r} missing "
+                    f"refresh_join_chain_view: step-{s_i} key {c!r} missing "
                     f"from right table {tables[right]}"
                 )
-            owners = [i for i in range(right) if k in fields[i]]
+            owners = [i for i in range(right) if c in fields[i]]
             if len(owners) != 1:
                 raise ValueError(
-                    f"refresh_join_chain_view: step-{s_i} key {k!r} must "
+                    f"refresh_join_chain_view: step-{s_i} key {c!r} must "
                     f"exist on exactly one of tables[0..{s_i}] (owners: "
                     f"{[tables[i] for i in owners]})"
                 )
-            cols[right][k] = True
-            cols[owners[0]][k] = True
+            cols[right][c] = True
+            cols[owners[0]][c] = True
     col_lists = [list(c) for c in cols]
 
-    def new_state(i: int) -> DataFrame:
-        return tbls[i].read(
-            spark, snapshot_id=heads[i].snapshot_id
-        ).select(*col_lists[i])
+    def new_join() -> DataFrame:
+        joined = None
+        for i, (t, h) in enumerate(zip(tbls, heads)):
+            state = t.read(spark, snapshot_id=h.snapshot_id).select(*col_lists[i])
+            joined = state if i == 0 else joined.join(state, ons[i - 1])
+        return joined
 
     if wms[0] is None:
-        joined = new_state(0)
-        for s_i in range(1, n):
-            joined = joined.join(new_state(s_i), ons[s_i - 1])
-        if sum_cols is not None:
-            refreshed = ivm.grouped_aggregate(joined, keys, sum_cols)
-        elif moment_cols is not None:
-            refreshed = ivm.grouped_moments(joined, keys, moment_cols)
-        elif distinct_col is not None:
-            refreshed = ivm.grouped_distinct_aux(joined, keys, distinct_col)
-        else:
-            refreshed = ivm.grouped_minmax(joined, keys, minmax_cols)
+        refreshed = {
+            "sum": lambda j: ivm.grouped_aggregate(j, keys, sum_cols),
+            "moments": lambda j: ivm.grouped_moments(j, keys, moment_cols),
+            "distinct": lambda j: ivm.grouped_distinct_aux(j, keys, distinct_col),
+            "minmax": lambda j: ivm.grouped_minmax(j, keys, minmax_cols),
+            "topk": lambda j: ivm.grouped_topk(j, keys, metric_col, ids, k),
+        }[kind](new_join())
     else:
         cls = [
             tbls[i].changelog(spark, wms[i], heads[i].snapshot_id)
@@ -1437,16 +1223,24 @@ def refresh_join_chain_view(
             r_cl = cls[s_i]
             if l_cl is not None or r_cl is not None:
                 # the right table's manifest-pruned old state (stats agg
-                # over the LEFT delta) and the accumulated left old
-                # state's key prune (stats agg over the RIGHT delta) are
-                # independent driver-blocking chains — overlap them,
-                # same §2.6 shape as refresh_join_view's two sides
+                # over the LEFT delta) and the left old state's prune
+                # (stats agg over the RIGHT delta) are independent
+                # driver-blocking chains — overlap them. At the first
+                # step the left old state is one table, so it gets the
+                # manifest prune too
                 with ThreadPoolExecutor(max_workers=2) as pool:
                     fut_r = pool.submit(
                         _old_state,
                         spark, tbls[s_i], wms[s_i], col_lists[s_i], l_cl, on_s,
                     )
-                    fut_l = pool.submit(_df_key_pruned, l_old, r_cl, on_s)
+                    fut_l = (
+                        pool.submit(
+                            _old_state,
+                            spark, tbls[0], wms[0], col_lists[0], r_cl, on_s,
+                        )
+                        if s_i == 1
+                        else pool.submit(_df_key_pruned, l_old, r_cl, on_s)
+                    )
                     r_pruned = fut_r.result()
                     l_old_pruned = fut_l.result()
                 new_cl = ivm.join_delta(
@@ -1463,28 +1257,23 @@ def refresh_join_chain_view(
             )
             l_cl = new_cl
         base = vt.read(spark)
-        if sum_cols is not None:
+        if kind == "sum":
             delta = ivm.agg_delta(l_cl, keys, sum_cols)
             refreshed = ivm.apply_agg_delta(base, delta, keys, sum_cols)
-        elif moment_cols is not None:
+        elif kind == "moments":
             delta = ivm.moments_delta(l_cl, keys, moment_cols)
             refreshed = ivm.apply_moments_delta(base, delta, keys, moment_cols)
-        elif distinct_col is not None:
+        elif kind == "distinct":
             refreshed = ivm.apply_distinct_delta(base, l_cl, keys, distinct_col)
+        elif kind == "minmax":
+            refreshed = ivm.apply_minmax_delta(
+                base, l_cl, new_join(), keys, minmax_cols
+            )
         else:
-            cur = new_state(0)
-            for s_i in range(1, n):
-                cur = cur.join(new_state(s_i), ons[s_i - 1])
-            refreshed = ivm.apply_minmax_delta(base, l_cl, cur, keys, minmax_cols)
-    kind = next(
-        kn
-        for kn, vc in (
-            ("sum", sum_cols), ("moments", moment_cols),
-            ("minmax", minmax_cols),
-            ("distinct", [distinct_col] if distinct_col is not None else None),
-        )
-        if vc is not None
-    )
+            refreshed = ivm.apply_topk_delta(
+                base, l_cl, new_join(), keys, metric_col, ids, k,
+                collapse="net",
+            )
     summary = {
         f"ivm.src_{i}_snapshot_id": str(heads[i].snapshot_id) for i in range(n)
     }
@@ -1493,8 +1282,13 @@ def refresh_join_chain_view(
         "ivm.ons": json.dumps(ons),
         "ivm.keys": json.dumps(keys),
         "ivm.kind": kind,
-        "ivm.cols": json.dumps(vcols),
     })
+    if kind == "topk":
+        summary.update({
+            "ivm.metric": metric_col, "ivm.ids": json.dumps(ids), "ivm.k": str(k),
+        })
+    else:
+        summary["ivm.cols"] = json.dumps(vcols)
     catalog.write(
         view_database, view_table, refreshed, mode="overwrite",
         summary_extra=summary,
@@ -1597,41 +1391,30 @@ def refresh_view_auto(spark: SparkSession, catalog, view_database: str,
             "metadata — not an auto-refreshable maintained view"
         )
     keys = json.loads(s["ivm.keys"])
-    if "ivm.srcs" in s:
-        srcs = [tuple(x.split(".", 1)) for x in json.loads(s["ivm.srcs"])]
-        ons = json.loads(s["ivm.ons"])
-        if kind == "topk":
-            if len(srcs) != 2:
-                raise ValueError("top-k join views are two-table")
-            return refresh_topk_join_view(
-                spark, catalog, *srcs[0], *srcs[1], view_database, view_table,
-                on=ons[0], keys=keys, metric_col=s["ivm.metric"],
-                id_cols=json.loads(s["ivm.ids"]), k=int(s["ivm.k"]),
-            )
+    if kind == "topk":
+        kinds = dict(
+            metric_col=s["ivm.metric"], id_cols=json.loads(s["ivm.ids"]),
+            k=int(s["ivm.k"]),
+        )
+    elif kind != "ann_cells":
         cols = json.loads(s["ivm.cols"])
         kinds = {
             "sum": dict(sum_cols=cols), "moments": dict(moment_cols=cols),
             "minmax": dict(minmax_cols=cols),
             "distinct": dict(distinct_col=cols[0]),
         }[kind]
-        # two-table views use the a/b watermark protocol; longer
-        # chains (or 2-chains built by the chain refresher) the
-        # positional one — the stamped watermark names disambiguate
-        if len(srcs) == 2 and "ivm.src_a_snapshot_id" in s:
-            return refresh_join_view(
-                spark, catalog, *srcs[0], *srcs[1], view_database, view_table,
-                on=ons[0], keys=keys, **kinds,
-            )
+    if "ivm.srcs" in s:
+        srcs = [tuple(x.split(".", 1)) for x in json.loads(s["ivm.srcs"])]
         return refresh_join_chain_view(
-            spark, catalog, list(srcs), view_database, view_table,
-            ons=ons, keys=keys, **kinds,
+            spark, catalog, srcs, view_database, view_table,
+            ons=json.loads(s["ivm.ons"]), keys=keys, **kinds,
         )
     src_db, src_tbl = s["ivm.src"].split(".", 1)
     if kind == "topk":
         return refresh_topk_view(
             spark, catalog, src_db, src_tbl, view_database, view_table,
-            keys=keys, metric_col=s["ivm.metric"],
-            id_col=json.loads(s["ivm.ids"]), k=int(s["ivm.k"]),
+            keys=keys, metric_col=kinds["metric_col"], id_col=kinds["id_cols"],
+            k=kinds["k"],
         )
     if kind == "ann_cells":
         return refresh_ann_index(
@@ -1639,12 +1422,6 @@ def refresh_view_auto(spark: SparkSession, catalog, view_database: str,
             s["ann.centroids"], id_col=s["ann.id_col"],
             vec_col=s["ann.vec_col"],
         )
-    cols = json.loads(s["ivm.cols"])
-    kinds = {
-        "sum": dict(sum_cols=cols), "moments": dict(moment_cols=cols),
-        "minmax": dict(minmax_cols=cols),
-        "distinct": dict(distinct_col=cols[0]),
-    }[kind]
     return refresh_view_changelog(
         spark, catalog, src_db, src_tbl, view_database, view_table,
         keys=keys, **kinds,
@@ -2046,6 +1823,10 @@ def list_views(catalog, databases: list[str] | None = None) -> list[dict]:
     `view-refresh-auto`/`query-aggregate --refresh-stale`: which
     views exist, which can answer queries right now, which need a
     refresh. Pure metadata; one dict per view."""
+    from apache_iceberg_tables_migration_tool_spark.plans.rewriter import (
+        _join_view_fresh,
+    )
+
     out: list[dict] = []
     for db in databases or catalog.list_namespaces():
         if db.startswith("_"):
@@ -2063,7 +1844,7 @@ def list_views(catalog, databases: list[str] | None = None) -> list[dict]:
             )
             if "ivm.srcs" in s:
                 tabs = [tuple(x.split(".", 1)) for x in srcs]
-                fresh = _join_view_fresh_meta(catalog, s, tabs)
+                fresh = _join_view_fresh(catalog, s, tabs)
             else:
                 src_db, src_t = s["ivm.src"].split(".", 1)
                 head = catalog.table(src_db, src_t).current_snapshot()
@@ -2077,17 +1858,3 @@ def list_views(catalog, databases: list[str] | None = None) -> list[dict]:
                 "fresh": bool(fresh),
             })
     return out
-
-
-def _join_view_fresh_meta(catalog, s: dict, tables) -> bool:
-    """Freshness of a multi-source view from its stamped watermarks
-    (same rule as the rewriter's `_join_view_fresh`)."""
-    if "ivm.src_a_snapshot_id" in s:
-        names = ["ivm.src_a_snapshot_id", "ivm.src_b_snapshot_id"]
-    else:
-        names = [f"ivm.src_{i}_snapshot_id" for i in range(len(tables))]
-    for (db, t), nm in zip(tables, names):
-        head = catalog.table(db, t).current_snapshot()
-        if head is None or s.get(nm) != str(head.snapshot_id):
-            return False
-    return True

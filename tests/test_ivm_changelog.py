@@ -6,6 +6,7 @@ commits and compaction — the cases the file-tail fold must reject."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -17,6 +18,7 @@ from apache_iceberg_tables_migration_tool_spark.streaming.pipelines import (
     maintain_view_changelog,
     refresh_view_changelog,
 )
+from tests.test_migration import _jobs_launched
 
 
 def _view_rows(df):
@@ -1356,3 +1358,208 @@ def test_join_chain_composite_step_key(spark, tmp_path):
     assert refresh_join_chain_view(*args, **kw) is not None
     got = {r["g"]: (r["group_count"], r["sum_v"]) for r in vt.read(spark).collect()}
     assert got == {"x": (1, 100), "y": (1, 7)}
+
+
+# ---------------------------------------------------------------------------
+# One join-view refresh: two-table and top-k views ride the chain fold
+# ---------------------------------------------------------------------------
+
+
+def _legacy_join_view(spark, cat, vdb, kind):
+    """Fabricate a two-table view exactly as the earlier dedicated
+    two-table refreshers committed it: the view rows at the current
+    heads, stamped with the ``ivm.src_a/b_snapshot_id`` watermarks."""
+    ha = cat.table("db", "ords").current_snapshot().snapshot_id
+    hb = cat.table("db", "items").current_snapshot().snapshot_id
+    stamp = {
+        "ivm.src_a_snapshot_id": str(ha),
+        "ivm.src_b_snapshot_id": str(hb),
+        "ivm.srcs": json.dumps(["db.ords", "db.items"]),
+        "ivm.ons": json.dumps([["ok"]]),
+        "ivm.keys": json.dumps(["p"]),
+        "ivm.kind": kind,
+    }
+    if kind == "topk":
+        stamp.update({"ivm.metric": "qty", "ivm.ids": json.dumps(["ok", "ln"]),
+                      "ivm.k": "2"})
+    else:
+        stamp["ivm.cols"] = json.dumps(["qty"])
+    cat.write(vdb, "v", _legacy_recompute(spark, cat, kind), mode="overwrite",
+              summary_extra=stamp)
+
+
+def _legacy_recompute(spark, cat, kind):
+    j = cat.table("db", "ords").read(spark).join(
+        cat.table("db", "items").read(spark), ["ok"]
+    )
+    if kind == "topk":
+        return ivm.grouped_topk(j, ["p"], "qty", ["ok", "ln"], 2)
+    return ivm.grouped_aggregate(j, ["p"], ["qty"])
+
+
+def test_legacy_two_table_stamps_still_refresh(spark, tmp_path):
+    """Sum and top-k views committed under the two-table watermark
+    names (``ivm.src_a/b_snapshot_id``) report fresh, fold exactly
+    through the public wrappers (and a top-k one through
+    ``refresh_view_auto``), and come out stamped positionally — fresh
+    again afterwards."""
+    from apache_iceberg_tables_migration_tool_spark.plans.rewriter import (
+        answer_topk_join,
+        find_join_rewrite,
+    )
+    from apache_iceberg_tables_migration_tool_spark.streaming.pipelines import (
+        list_views,
+        refresh_join_view,
+        refresh_topk_join_view,
+        refresh_view_auto,
+    )
+
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    cat.write("db", "ords", spark.createDataFrame(
+        [(1, "x"), (2, "y"), (3, "x")], "ok long, p string"))
+    cat.write("db", "items", spark.createDataFrame(
+        [(1, 1, 10), (1, 2, 50), (2, 1, 7), (3, 1, 40)],
+        "ok long, ln long, qty long").coalesce(1))
+    # one view per (refresh path, kind), each in its own namespace
+    views = {"wrap_sum": "sum", "wrap_topk": "topk", "auto_topk": "topk"}
+    for vdb, kind in views.items():
+        _legacy_join_view(spark, cat, vdb, kind)
+    tables = [("db", "ords"), ("db", "items")]
+
+    def fresh(vdb):
+        [listed] = list_views(cat, [vdb])
+        if views[vdb] == "topk":
+            _, m = answer_topk_join(
+                spark, cat, tables, [["ok"]], ["p"], "qty", ["ok", "ln"], 2,
+                search_databases=[vdb],
+            )
+        else:
+            m = find_join_rewrite(
+                cat, tables, [["ok"]], ["p"], [("sum", "qty", "sq")],
+                search_databases=[vdb],
+            )
+        return listed["fresh"] and m is not None
+
+    assert all(fresh(vdb) for vdb in views)
+    cat.write("db", "ords", spark.createDataFrame([(4, "y")], "ok long, p string"))
+    cat.write("db", "items", spark.createDataFrame(
+        [(4, 1, 90), (2, 2, 8)], "ok long, ln long, qty long"))
+    cat.delete_where("db", "items", F.col("qty") == 50, mode="merge-on-read")
+    cat.delete_where("db", "ords", F.col("ok") == 3)
+    assert not any(fresh(vdb) for vdb in views)
+    two = (spark, cat, "db", "ords", "db", "items")
+    refresh_join_view(*two, "wrap_sum", "v", on=["ok"], keys=["p"], sum_cols=["qty"])
+    refresh_topk_join_view(
+        *two, "wrap_topk", "v", on=["ok"], keys=["p"], metric_col="qty",
+        id_cols=["ok", "ln"], k=2,
+    )
+    assert refresh_view_auto(spark, cat, "auto_topk", "v") is not None
+    heads = [str(cat.table(*t).current_snapshot().snapshot_id) for t in tables]
+    for vdb, kind in views.items():
+        vt = cat.table(vdb, "v")
+        want = _view_rows(_legacy_recompute(spark, cat, kind))
+        assert _view_rows(vt.read(spark)) == want, vdb
+        s = vt.current_snapshot().summary
+        assert [s.get("ivm.src_0_snapshot_id"), s.get("ivm.src_1_snapshot_id")] == heads
+        assert "ivm.src_a_snapshot_id" not in s and "ivm.src_b_snapshot_id" not in s
+        assert s["ivm.kind"] == kind
+        assert fresh(vdb), vdb
+
+
+def test_two_table_fold_job_count_tripwire(spark, tmp_path):
+    """Two-table sum and top-k views run no more Spark jobs per
+    refresh than the dedicated two-table refreshers did — initial
+    build, one-side append fold, both-sides fold over
+    orders(700) ⋈ items(5000) — and stay exact."""
+    from apache_iceberg_tables_migration_tool_spark.streaming.pipelines import (
+        refresh_join_view,
+        refresh_topk_join_view,
+    )
+
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    two = (spark, cat, "db", "ords", "db", "items", "db")
+    refreshes = {
+        "sum": lambda: refresh_join_view(
+            *two, "sum_v", on=["ok"], keys=["p"], sum_cols=["qty"],
+        ),
+        "topk": lambda: refresh_topk_join_view(
+            *two, "topk_v", on=["ok"], keys=["p"], metric_col="qty",
+            id_cols=["ok", "ln"], k=2,
+        ),
+    }
+    counts = {kind: [] for kind in refreshes}
+
+    def fold():
+        for kind, refresh in refreshes.items():
+            counts[kind].append(_jobs_launched(spark, refresh)[1])
+
+    cat.write("db", "ords", spark.range(700).selectExpr(
+        "id AS ok", "CONCAT('p', CAST(id % 7 AS STRING)) AS p"))
+    cat.write("db", "items", spark.range(5000).selectExpr(
+        "id % 700 AS ok", "id AS ln", "(id * 37) % 101 AS qty"))
+    fold()
+    cat.write("db", "items", spark.range(5000, 5200).selectExpr(
+        "id % 700 AS ok", "id AS ln", "(id * 37) % 101 AS qty"))
+    fold()
+    cat.write("db", "ords", spark.range(700, 720).selectExpr(
+        "id AS ok", "CONCAT('p', CAST(id % 7 AS STRING)) AS p"))
+    cat.delete_where("db", "items", F.col("ln") % 97 == 0)
+    fold()
+    assert all(n <= cap for n, cap in zip(counts["sum"], (3, 8, 16))), counts
+    assert all(n <= cap for n, cap in zip(counts["topk"], (3, 11, 21))), counts
+    for kind in refreshes:
+        assert _view_rows(cat.table("db", f"{kind}_v").read(spark)) == _view_rows(
+            _legacy_recompute(spark, cat, kind)
+        ), kind
+
+
+def test_join_chain_view_topk_kind_exact(spark, tmp_path):
+    """Top-k over a 3-table chain (cust ⋈ ords ⋈ items): a one-sided
+    fold at the fact end, then one fold with appends on every table
+    and deletes at both ends (terms with several delta factors, and
+    stored rows dying so groups rescan through the chain) — always
+    equal to grouped_topk over the recomputed join."""
+    from apache_iceberg_tables_migration_tool_spark.streaming.pipelines import (
+        refresh_join_chain_view,
+    )
+
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    args = (spark, cat, [("db", "cust"), ("db", "ords"), ("db", "items")],
+            "db", "tkchain")
+    kw = dict(ons=[["ck"], ["ok"]], keys=["nat"], metric_col="qty",
+              id_cols=["ok", "ln"], k=2)
+
+    def recompute():
+        j = (
+            cat.table("db", "cust").read(spark)
+            .join(cat.table("db", "ords").read(spark), ["ck"])
+            .join(cat.table("db", "items").read(spark), ["ok"])
+        )
+        return ivm.grouped_topk(j, ["nat"], "qty", ["ok", "ln"], 2)
+
+    vt = cat.table("db", "tkchain")
+    cat.write("db", "cust", spark.createDataFrame(
+        [(1, "x"), (2, "y")], "ck long, nat string"))
+    cat.write("db", "ords", spark.createDataFrame(
+        [(1, 10), (1, 11), (2, 20)], "ck long, ok long").coalesce(1))
+    cat.write("db", "items", spark.createDataFrame(
+        [(10, 1, 3), (10, 2, 9), (11, 1, 5), (20, 1, 7), (20, 2, 1)],
+        "ok long, ln long, qty long").coalesce(1))
+    assert refresh_join_chain_view(*args, **kw) is not None
+    assert _view_rows(vt.read(spark)) == _view_rows(recompute())
+    assert vt.current_snapshot().summary["ivm.kind"] == "topk"
+    cat.write("db", "items", spark.createDataFrame(
+        [(11, 2, 8), (20, 3, 4)], "ok long, ln long, qty long"))
+    assert refresh_join_chain_view(*args, **kw) is not None
+    assert _view_rows(vt.read(spark)) == _view_rows(recompute())
+    cat.write("db", "cust", spark.createDataFrame([(3, "x")], "ck long, nat string"))
+    cat.write("db", "ords", spark.createDataFrame([(3, 30)], "ck long, ok long"))
+    cat.write("db", "items", spark.createDataFrame(
+        [(30, 1, 6)], "ok long, ln long, qty long"))
+    cat.delete_where("db", "cust", F.col("ck") == 2)
+    cat.delete_where("db", "items", F.col("qty") == 9, mode="merge-on-read")
+    assert refresh_join_chain_view(*args, **kw) is not None
+    assert _view_rows(vt.read(spark)) == _view_rows(recompute())
+    got = {(r["nat"], r["ok"], r["ln"]): r["rk"] for r in vt.read(spark).collect()}
+    assert got == {("x", 11, 2): 1, ("x", 30, 1): 2}
+    assert refresh_join_chain_view(*args, **kw) is None  # watermarks current
