@@ -2641,21 +2641,17 @@ SELECT
     AS files_read,
   CAST(SUM(CASE WHEN p BETWEEN lo AND hi THEN 0 ELSE 1 END) AS BIGINT)
     AS files_skipped,
-  CAST((SELECT COUNT(*) FROM per_file) AS BIGINT) AS files_total,
-  TRUE AS dist_matches_driver
+  CAST((SELECT COUNT(*) FROM per_file) AS BIGINT) AS files_total
 FROM per_file, probe
 """,
 )
 def scan_planning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scan-planning observability + distributed-planning parity in
-    one carrier (r9): write orders keys into a catalog table banded by
-    a DETERMINISTIC range formula (least(7, floor((id-min)*8/span)) —
-    identical in Spark and the DuckDB oracle, unlike
-    repartitionByRange's sampled boundaries), one file per band, then
-    point-look-up the minimum key and report how many files the
-    manifest planner reads vs skips — plus a flag proving
-    :meth:`plan_files_dist` (the executor-side manifest-chunk kernel)
-    picked EXACTLY the driver walk's file set. Mirrors Iceberg's
+    """Scan-planning observability (r9): write orders keys into a
+    catalog table banded by a DETERMINISTIC range formula
+    (least(7, floor((id-min)*8/span)) — identical in Spark and the
+    DuckDB oracle, unlike repartitionByRange's sampled boundaries),
+    one file per band, then point-look-up the minimum key and report
+    how many files the manifest planner reads vs skips. Mirrors Iceberg's
     planned-vs-scanned metrics surface; the reference has no planning
     observability at all (every read is a full-table SELECT,
     `5_migrate_tables_data.py:72-80`)."""
@@ -2677,15 +2673,13 @@ def scan_planning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl = cat.table("db", "keys")
         preds = [("id", "=", int(lo))]
         rep = tbl.scan_report(spark, preds)
-        drv = {f.path for f in tbl.plan_files(preds)}
-        dist = {f.path for f in tbl.plan_files_dist(spark, preds)}
         agg = rep.agg(
             F.sum((F.col("decision") == "read").cast("long")).alias("files_read"),
             F.sum((F.col("decision") == "skipped").cast("long")).alias(
                 "files_skipped"
             ),
             F.count("*").alias("files_total"),
-        ).withColumn("dist_matches_driver", F.lit(dist == drv))
+        )
         return spark.createDataFrame(agg.collect(), agg.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -200,8 +200,10 @@ class _LazySnapshot(Snapshot):
     ``sync_history``'s chain comparisons — read only scalars and
     summaries and must not pay O(table files) per listed snapshot.
     Touching ``.files`` / ``.delete_files`` (or ``total_records`` /
-    ``total_bytes``, built on them) expands JUST this snapshot via
-    the owning table's content-addressed chunk reader. The class-
+    ``total_bytes``, built on them) expands JUST that list of this
+    snapshot via the owning table's content-addressed chunk reader —
+    a merge-on-read scan that needs only the delete files never
+    builds an object per data file. The class-
     level properties are data descriptors, so they shadow the
     attribute assignments the dataclass-generated ``__init__`` makes
     and route them to ``_files`` / ``_delete_files``."""
@@ -233,20 +235,14 @@ class _LazySnapshot(Snapshot):
         self._table = table
         return self
 
-    def _materialize(self) -> None:
+    def _entries(self, key: str) -> list[dict]:
         assert self._raw is not None and self._table is not None
-        self._table._expand_snapshot(self._raw)
-        if self._files is None:
-            self._files = [DataFile(**f) for f in self._raw.get("files", [])]
-        if self._delete_files is None:
-            self._delete_files = [
-                DeleteFile(**f) for f in self._raw.get("delete_files", [])
-            ]
+        return self._table._expand_snapshot(self._raw, (key,)).get(key, [])
 
     @property
     def files(self) -> list:
         if self._files is None:
-            self._materialize()
+            self._files = [DataFile(**f) for f in self._entries("files")]
         return self._files
 
     @files.setter
@@ -256,7 +252,9 @@ class _LazySnapshot(Snapshot):
     @property
     def delete_files(self) -> list:
         if self._delete_files is None:
-            self._materialize()
+            self._delete_files = [
+                DeleteFile(**f) for f in self._entries("delete_files")
+            ]
         return self._delete_files
 
     @delete_files.setter
@@ -1124,16 +1122,23 @@ class SnapTable:
             runs.append(cur)
         return runs
 
-    def _expand_snapshot(self, s: dict) -> dict:
-        """Materialize one snapshot dict's file lists from its chunk
-        refs, in place (idempotent)."""
-        if "files_ref" in s and "files" not in s:
+    def _expand_snapshot(
+        self, s: dict, lists: tuple[str, ...] = ("files", "delete_files")
+    ) -> dict:
+        """Materialize one snapshot dict's file lists (both, or only
+        those named in ``lists``) from their chunk refs, in place
+        (idempotent)."""
+        if "files" in lists and "files_ref" in s and "files" not in s:
             files: list = []
             for sha in s["files_ref"]:
                 files.extend(self._read_chunk(sha))
             s["files"] = files
             s["_files_fp"] = self._fingerprint(files)
-        if "delete_files_ref" in s and "delete_files" not in s:
+        if (
+            "delete_files" in lists
+            and "delete_files_ref" in s
+            and "delete_files" not in s
+        ):
             s["delete_files"] = (
                 self._read_chunk(s["delete_files_ref"])
                 if s["delete_files_ref"]
@@ -1797,14 +1802,27 @@ class SnapTable:
         the 100 TB selective-scan path: the executor never sees files
         the predicate rules out.
 
-        Point predicates additionally prune ``bucket(N, col)`` hidden
-        partitions: the driver recomputes Spark's xxhash64 of the
-        literal in pure Python (`functions/xxh64.py`, bit-parity
-        pinned) and rules out files whose path bucket can't contain it
-        — the primary-key-lookup path on a bucketed 100 TB table.
-        Each file resolves N against its OWN origin commit's spec
-        (spec evolution may rebucket); unresolvable origins, uncovered
-        literal types, and statless files are conservatively kept."""
+        Point predicates additionally prune by bloom filter (a bit
+        the literal sets that the file's filter lacks proves absence)
+        and by ``bucket(N, col)`` hidden partition: the driver
+        recomputes Spark's xxhash64 of the literal in pure Python
+        (`functions/xxh64.py`, bit-parity pinned) and rules out files
+        whose path bucket can't contain it — the primary-key-lookup
+        path on a bucketed 100 TB table. Each file resolves N, and the
+        column names its stats were written under, against its OWN
+        origin commit (spec evolution may rebucket, renames move
+        stats keys); unresolvable origins, uncovered literal types,
+        and statless files are conservatively kept.
+
+        The rules run over the snapshot's raw manifest entries, and
+        a :class:`DataFile` is built only for a kept entry, so the
+        driver's cost is one pass over the manifest plus O(kept
+        files). Everything that does not depend on the file is done
+        once: each point literal is hashed once, each literal is
+        normalized once, and the stats-key translation and bucket
+        targets are computed once per origin commit. ``_decisions``
+        (what :meth:`scan_report` shows) returns every file with its
+        verdict: ``kept`` or ``pruned:{bounds:<col>|bloom:<col>|bucket}``."""
         from apache_iceberg_tables_migration_tool_spark.functions.xxh64 import (
             spark_xxhash64,
         )
@@ -1822,48 +1840,61 @@ class SnapTable:
             fld.name: fld.dataType.simpleString()
             for fld in T._parse_datatype_string(snap.schema_ddl).fields
         }
-        eq_preds = [(c, v) for c, op, v in predicates if op == "="]
+        bounds = [(c, op, _json_stat(v)) for c, op, v in predicates]
 
-        def _bucket_excludes(f: DataFile) -> bool:
-            if not eq_preds or not f.stats:
-                return False
-            spec = specs_by_sid.get(_origin_sid(f.path))
-            if not spec:
-                return False
-            for sf in spec_fields(spec):
-                if sf.kind != "bucket":
-                    continue
-                for c, v in eq_preds:
-                    if sf.source != c or v is None:
-                        continue
-                    b = f.stats.get(sf.partition_name)
-                    h = spark_xxhash64(v, col_types.get(c, ""))
-                    if b is None or h is None:
-                        continue
-                    if not (b[0] <= h % sf.param <= b[1]):
-                        return True
-            return False
+        def _hash(c: str, v) -> int | None:
+            try:
+                return spark_xxhash64(v, col_types.get(c, ""))
+            except (TypeError, ValueError):  # literal not of the column's type
+                return None
 
-        decided: list[tuple[DataFile, str]] = []
-        for f in snap.files:
+        hashes = [
+            (c, h)
+            for c, op, v in predicates
+            if op == "=" and v is not None and (h := _hash(c, v)) is not None
+        ]
+        probes = [(c, _bloom_positions(h)) for c, h in hashes]
+
+        origins: dict[int, tuple[dict[str, str], list[tuple[str, int]]]] = {}
+
+        def _origin(osid: int) -> tuple[dict[str, str], list[tuple[str, int]]]:
             # footer stats are keyed by the column names the file was
             # WRITTEN under — translate each predicate column through
             # the field-id mapping when evolution tracking is active
-            stats_key = {c: c for c, _, _ in predicates}
-            entry = commit_schemas.get(str(_origin_sid(f.path)))
-            if entry is not None and snap.field_ids is not None:
+            keys = {c: c for c, _, _ in predicates}
+            entry = commit_schemas.get(str(osid))
+            if entry is not None:
                 by_id = {v: k for k, v in (entry.get("field_ids") or {}).items()}
-                for c, _, _ in predicates:
+                for c in keys:
                     tid = snap.field_ids.get(c)
                     origin = by_id.get(tid) if tid is not None else c
-                    stats_key[c] = origin if origin is not None else "\x00absent"
+                    keys[c] = origin if origin is not None else "\x00absent"
+            targets = [
+                (sf.partition_name, h % sf.param)
+                for sf in spec_fields(specs_by_sid.get(osid) or [])
+                if sf.kind == "bucket"
+                for c, h in hashes
+                if sf.source == c
+            ]
+            return keys, targets
+
+        if isinstance(snap, _LazySnapshot):
+            entries = snap._entries("files")
+        else:  # legacy inline metadata: the list was parsed eagerly
+            entries = [vars(f) for f in snap.files]
+        decided: list[tuple[DataFile, str]] = []
+        for e in entries:
+            osid = _origin_sid(e["path"])
+            if osid not in origins:
+                origins[osid] = _origin(osid)
+            keys, targets = origins[osid]
+            stats = e.get("stats") or {}
             verdict = "kept"
-            for col, op, val in predicates:
-                b = (f.stats or {}).get(stats_key[col])
+            for col, op, val in bounds:
+                b = stats.get(keys[col])
                 if b is None:
                     continue
                 lo, hi = b
-                val = _json_stat(val)
                 if not isinstance(val, type(lo)) and not (
                     isinstance(val, (int, float))
                     and isinstance(lo, (int, float))
@@ -1878,371 +1909,31 @@ class SnapTable:
                 ):
                     verdict = f"pruned:bounds:{col}"
                     break
-            if verdict == "kept":
-                # bloom probe: a point predicate whose value sets a bit
-                # the file's filter lacks PROVES absence (no false
-                # negatives by construction — every written value set
-                # its bits). Guards: bloom stored under the file's
-                # WRITTEN column name (rename-safe via stats_key) and
-                # probed only when the stored type matches the current
-                # column type (xxhash64 is type-dependent; a probe
-                # across int→bigint promotion would be garbage)
-                for col, op, val in predicates:
-                    if op != "=" or val is None:
+            if verdict == "kept" and e.get("blooms"):
+                # a missing bit proves absence (no false negatives by
+                # construction — every written value set its bits).
+                # Guards: bloom stored under the file's WRITTEN column
+                # name (rename-safe via keys) and probed only when the
+                # stored type matches the current column type (xxhash64
+                # is type-dependent; a probe across int→bigint
+                # promotion would be garbage)
+                for col, positions in probes:
+                    bloom = e["blooms"].get(keys[col])
+                    if not bloom or bloom.get("type") != col_types.get(col):
                         continue
-                    entry = (f.blooms or {}).get(stats_key[col])
-                    if not entry or entry.get("type") != col_types.get(col):
-                        continue
-                    h = spark_xxhash64(val, col_types[col])
-                    if h is None:
-                        continue
-                    bits = bytes.fromhex(entry["bits"])
-                    if any(
-                        not (bits[p // 8] >> (p % 8)) & 1
-                        for p in _bloom_positions(h)
-                    ):
+                    bits = bytes.fromhex(bloom["bits"])
+                    if any(not (bits[p // 8] >> (p % 8)) & 1 for p in positions):
                         verdict = f"pruned:bloom:{col}"
                         break
-            if verdict == "kept" and _bucket_excludes(f):
-                verdict = "pruned:bucket"
-            decided.append((f, verdict))
-        return [f for f, v in decided if v == "kept"] if not _decisions else decided
-
-    #: file count above which read_where plans distributed: the
-    #: driver walk in plan_files is O(files × predicates × bloom
-    #: probes) single-core — right for the sandbox, wrong at 10⁶
-    #: files, where the same evaluation spread over executors via
-    #: Arrow batches wins (verdict r8 #7). Measured crossover
-    #: (PERFORMANCE.md r9): driver ≈ 0.22 s per 10⁴ stat-only files
-    #: (steeper with blooms), dist ≈ 3 s fixed job overhead + a flat
-    #: distributed tail — so the switch sits at ~10⁵ files, safely
-    #: past the sandbox scale and well before the 10⁶-file cliff.
-    PLAN_DIST_THRESHOLD = 100_000
-
-    def _plan_files_manifests(
-        self,
-        spark: SparkSession,
-        predicates: list[tuple[str, str, object]],
-        snapshot_id: int | None = None,
-    ) -> list[DataFile] | None:
-        """Manifest-chunk fast path of :meth:`plan_files_dist` (see
-        its docstring): executors read and evaluate the chunk files;
-        the driver receives only kept entries. Returns None when the
-        snapshot isn't chunk-backed (legacy inline metadata) so the
-        caller can fall back."""
-        from apache_iceberg_tables_migration_tool_spark.functions.xxh64 import (
-            spark_xxhash64,
-        )
-
-        with open(self._meta_path) as f:
-            raw = json.load(f)
-        sid = snapshot_id if snapshot_id is not None else _current_id(raw)
-        sref = next(
-            (
-                s for s in raw.get("snapshots") or []
-                if s["snapshot_id"] == sid and "files_ref" in s
-            ),
-            None,
-        )
-        if sref is None:
-            return None
-        if not sref["files_ref"]:
-            return []
-        field_ids = sref.get("field_ids")
-        commit_schemas = (
-            raw.get("commit_schemas", {}) if field_ids is not None else {}
-        )
-        col_types = {
-            fld.name: fld.dataType.simpleString()
-            for fld in T._parse_datatype_string(sref["schema_ddl"]).fields
-        }
-        pred_cols = [c for c, _, _ in predicates]
-        preds = [(c, op, _json_stat(v)) for c, op, v in predicates]
-        eq_hash = {
-            c: spark_xxhash64(v, col_types.get(c, ""))
-            for c, op, v in predicates
-            if op == "=" and v is not None
-        }
-        # small per-origin contexts, precomputed from the raw snapshot
-        # summaries (no file lists touched)
-        key_maps: dict[int, dict[str, str]] = {}
-        bkt_maps: dict[int, list[tuple[str, int]]] = {}
-        for s in raw.get("snapshots") or []:
-            osid = s["snapshot_id"]
-            keys = {c: c for c in pred_cols}
-            entry = commit_schemas.get(str(osid))
-            if entry is not None and field_ids is not None:
-                by_id = {v: k for k, v in (entry.get("field_ids") or {}).items()}
-                for c in pred_cols:
-                    tid = field_ids.get(c)
-                    origin = by_id.get(tid) if tid is not None else c
-                    keys[c] = origin if origin is not None else "\x00absent"
-            key_maps[osid] = keys
-            bkt = []
-            for sf in spec_fields(s.get("partition_spec") or []):
-                if sf.kind != "bucket":
-                    continue
-                h = eq_hash.get(sf.source)
-                if h is not None:
-                    bkt.append((sf.partition_name, h % sf.param))
-            if bkt:
-                bkt_maps[osid] = bkt
-        chunk_paths = [
-            os.path.join(self._manifest_dir, f"{sha}.json")
-            for sha in sref["files_ref"]
-        ]
-        eqh = dict(eq_hash)
-
-        def kernel(batches):
-            import pandas as pd  # noqa: PLC0415
-
-            for b in batches:
-                kept: list[str] = []
-                for line in b["value"]:
-                    for e in json.loads(line):
-                        osid = _origin_sid(e["path"])
-                        sk = key_maps.get(osid) or {c: c for c in pred_cols}
-                        stats = e.get("stats") or {}
-                        ok = True
-                        for col, op, val in preds:
-                            bnd = stats.get(sk.get(col, col))
-                            if bnd is None:
-                                continue
-                            lo, hi = bnd
-                            if not isinstance(val, type(lo)) and not (
-                                isinstance(val, (int, float))
-                                and isinstance(lo, (int, float))
-                            ):
-                                continue
-                            if (
-                                (op == "=" and not (lo <= val <= hi))
-                                or (op == "<" and not (lo < val))
-                                or (op == "<=" and not (lo <= val))
-                                or (op == ">" and not (hi > val))
-                                or (op == ">=" and not (hi >= val))
-                            ):
-                                ok = False
-                                break
-                        if ok and e.get("blooms"):
-                            for col, h in eqh.items():
-                                if h is None:
-                                    continue
-                                entry = e["blooms"].get(sk.get(col, col))
-                                if not entry or entry.get("type") != col_types.get(col):
-                                    continue
-                                m, k = entry["m"], entry["k"]
-                                bits = bytes.fromhex(entry["bits"])
-                                u = h & 0xFFFFFFFFFFFFFFFF
-                                if any(
-                                    not (
-                                        bits[((u >> (13 * j)) & (m - 1)) // 8]
-                                        >> (((u >> (13 * j)) & (m - 1)) % 8)
-                                    )
-                                    & 1
-                                    for j in range(k)
-                                ):
-                                    ok = False
-                                    break
-                        if ok and osid in bkt_maps and stats:
-                            for pname, tgt in bkt_maps[osid]:
-                                bnd = stats.get(pname)
-                                if bnd is not None and not (bnd[0] <= tgt <= bnd[1]):
-                                    ok = False
-                                    break
-                        if ok:
-                            kept.append(json.dumps(e))
-                yield pd.DataFrame({"e": kept}, dtype=object)
-
-        rows = (
-            spark.read.text(chunk_paths)
-            .mapInPandas(kernel, "e string")
-            .collect()
-        )
-        return [DataFile(**json.loads(r["e"])) for r in rows]
-
-    def plan_files_dist(
-        self,
-        spark: SparkSession,
-        predicates: list[tuple[str, str, object]],
-        snapshot_id: int | None = None,
-    ) -> list[DataFile]:
-        """Distributed twin of :meth:`plan_files` — identical pruning
-        decisions (bounds, bloom, bucket; pinned by
-        ``test_plan_files_dist_matches_driver``), evaluated on
-        EXECUTORS instead of a driver loop.
-
-        The driver does one cheap metadata pass to build a compact
-        planning row per file: the [min, max] bounds for the
-        predicate columns only (pre-translated through the field-id
-        mapping, so evolution logic stays in one place), the bloom
-        bits for point-predicated columns (hex, shipped only when the
-        stored type matches), and the precomputed bucket target
-        (``xxhash64(literal) % N`` against the file's own origin
-        spec). Evaluation — bounds compares, bloom probes, bucket
-        range checks — runs in a ``mapInPandas`` Arrow kernel over
-        those rows; the driver gets back only the kept paths. At 10⁶
-        files the driver cost is building ~100-byte payloads, not
-        probing 10⁶ blooms serially.
-
-        MANIFEST FAST PATH (default with the chunked metadata
-        format): when the snapshot's file list lives in manifest
-        chunks on disk, Spark reads the chunk FILES directly
-        (``spark.read.text`` — executors parse the manifests, the
-        Iceberg distributed-planning shape) and the driver never
-        materializes an entry it doesn't keep: the kernel evaluates
-        every pruning rule — including the field-id stats-key
-        translation — and ships back only the kept entries. End to
-        end the driver cost is O(kept files), not O(table files)."""
-        from apache_iceberg_tables_migration_tool_spark.functions.xxh64 import (
-            spark_xxhash64,
-        )
-
-        fast = self._plan_files_manifests(spark, predicates, snapshot_id)
-        if fast is not None:
-            return fast
-        snap = self.resolve_snapshot(snapshot_id)
-        meta = self._load_meta(expand=False)
-        commit_schemas = (
-            meta.get("commit_schemas", {}) if snap.field_ids is not None else {}
-        )
-        specs_by_sid = {
-            s["snapshot_id"]: s.get("partition_spec", [])
-            for s in meta["snapshots"]
-        }
-        col_types = {
-            fld.name: fld.dataType.simpleString()
-            for fld in T._parse_datatype_string(snap.schema_ddl).fields
-        }
-        pred_cols = [c for c, _, _ in predicates]
-        eq_preds = [(c, v) for c, op, v in predicates if op == "="]
-        eq_hash = {
-            c: spark_xxhash64(v, col_types.get(c, ""))
-            for c, v in eq_preds
-            if v is not None
-        }
-        # per-origin translation and bucket context (≤ #snapshots keys)
-        key_cache: dict[int, dict[str, str]] = {}
-        bkt_cache: dict[int, list[tuple[str, str, int]]] = {}
-
-        def _keys_for(osid: int) -> dict[str, str]:
-            if osid not in key_cache:
-                out = {c: c for c in pred_cols}
-                entry = commit_schemas.get(str(osid))
-                if entry is not None and snap.field_ids is not None:
-                    by_id = {
-                        v: k for k, v in (entry.get("field_ids") or {}).items()
-                    }
-                    for c in pred_cols:
-                        tid = snap.field_ids.get(c)
-                        origin = by_id.get(tid) if tid is not None else c
-                        out[c] = origin if origin is not None else "\x00absent"
-                key_cache[osid] = out
-            return key_cache[osid]
-
-        def _buckets_for(osid: int) -> list[tuple[str, str, int]]:
-            if osid not in bkt_cache:
-                out = []
-                for sf in spec_fields(specs_by_sid.get(osid) or []):
-                    if sf.kind != "bucket":
-                        continue
-                    for c, _v in eq_preds:
-                        if sf.source == c and eq_hash.get(c) is not None:
-                            out.append(
-                                (c, sf.partition_name, eq_hash[c] % sf.param)
-                            )
-                bkt_cache[osid] = out
-            return bkt_cache[osid]
-
-        rows = []
-        for f in snap.files:
-            osid = _origin_sid(f.path)
-            sk = _keys_for(osid)
-            payload: dict = {}
-            if f.stats:
-                payload["s"] = {
-                    c: f.stats[sk[c]] for c in pred_cols if sk[c] in f.stats
-                }
-                bkt = [
-                    (tgt, f.stats[pn])
-                    for _c, pn, tgt in _buckets_for(osid)
-                    if pn in f.stats
-                ]
-                if bkt:
-                    payload["k"] = bkt
-            if f.blooms:
-                bl = {}
-                for c, h in eq_hash.items():
-                    entry = f.blooms.get(sk[c])
-                    if h is not None and entry and entry.get("type") == col_types.get(c):
-                        bl[c] = [entry["m"], entry["k"], entry["bits"]]
-                if bl:
-                    payload["b"] = bl
-            # default=str: freshly-written snapshots can hold
-            # non-JSON stat types; a stringified bound fails the
-            # kernel's isinstance compare and is conservatively kept,
-            # same as plan_files' incomparable-literal rule
-            rows.append((f.path, json.dumps(payload, default=str)))
-        pdf = spark.createDataFrame(rows, "path string, payload string")
-        preds = [(c, op, _json_stat(v)) for c, op, v in predicates]
-        eqh = dict(eq_hash)
-
-        def kernel(batches):
-            import pandas as pd  # noqa: PLC0415
-
-            for b in batches:
-                keep = []
-                for payload in b["payload"]:
-                    d = json.loads(payload)
-                    stats = d.get("s") or {}
-                    ok = True
-                    for col, op, val in preds:
-                        bnd = stats.get(col)
-                        if bnd is None:
-                            continue
-                        lo, hi = bnd
-                        if not isinstance(val, type(lo)) and not (
-                            isinstance(val, (int, float))
-                            and isinstance(lo, (int, float))
-                        ):
-                            continue
-                        if (
-                            (op == "=" and not (lo <= val <= hi))
-                            or (op == "<" and not (lo < val))
-                            or (op == "<=" and not (lo <= val))
-                            or (op == ">" and not (hi > val))
-                            or (op == ">=" and not (hi >= val))
-                        ):
-                            ok = False
-                            break
-                    if ok:
-                        for col, entry in (d.get("b") or {}).items():
-                            m, k, bits_hex = entry
-                            h = eqh[col]
-                            bits = bytes.fromhex(bits_hex)
-                            u = h & 0xFFFFFFFFFFFFFFFF
-                            if any(
-                                not (
-                                    bits[((u >> (13 * j)) & (m - 1)) // 8]
-                                    >> (((u >> (13 * j)) & (m - 1)) % 8)
-                                )
-                                & 1
-                                for j in range(k)
-                            ):
-                                ok = False
-                                break
-                    if ok:
-                        for tgt, bnd in d.get("k") or []:
-                            if not (bnd[0] <= tgt <= bnd[1]):
-                                ok = False
-                                break
-                    keep.append(ok)
-                yield pd.DataFrame({"path": b["path"][pd.Series(keep).values]})
-
-        kept = {
-            r["path"]
-            for r in pdf.mapInPandas(kernel, "path string").collect()
-        }
-        return [f for f in snap.files if f.path in kept]
+            if verdict == "kept" and stats:
+                for pname, tgt in targets:
+                    b = stats.get(pname)
+                    if b is not None and not (b[0] <= tgt <= b[1]):
+                        verdict = "pruned:bucket"
+                        break
+            if _decisions or verdict == "kept":
+                decided.append((DataFile(**e), verdict))
+        return decided if _decisions else [f for f, _ in decided]
 
     def read_where(
         self,
@@ -2250,18 +1941,13 @@ class SnapTable:
         predicates: list[tuple[str, str, object]],
         snapshot_id: int | None = None,
     ) -> DataFrame:
-        """Selective scan: manifest-prune files via :meth:`plan_files`
-        (driver walk, or the distributed :meth:`plan_files_dist` above
-        ``PLAN_DIST_THRESHOLD`` files), then apply the same predicates
-        as DataFrame filters (pruning is a superset guarantee,
-        filtering is exact)."""
+        """Selective scan: manifest-prune files via :meth:`plan_files`,
+        then apply the same predicates as DataFrame filters (pruning
+        is a superset guarantee, filtering is exact). Only the kept
+        files and the snapshot's delete files become objects on the
+        driver."""
         snap = self.resolve_snapshot(snapshot_id)
-        if len(snap.files) >= self.PLAN_DIST_THRESHOLD:
-            files = self.plan_files_dist(
-                spark, predicates, snapshot_id=snap.snapshot_id
-            )
-        else:
-            files = self.plan_files(predicates, snapshot_id=snap.snapshot_id)
+        files = self.plan_files(predicates, snapshot_id=snap.snapshot_id)
         df = self._read_files(
             spark, snap, [f.path for f in files], apply_deletes=True
         )
@@ -2286,7 +1972,9 @@ class SnapTable:
         :meth:`plan_files` would make for ``predicates`` — which files
         the scan reads and which were skipped by min/max bounds, a
         bloom filter, or a bucket hidden partition (and on which
-        column). Pure driver-side metadata (nothing is read); the
+        column). Pure driver-side metadata (no data file is read): the
+        same planner pass as the scan itself, keeping a verdict for
+        every manifest entry instead of only the kept ones. The
         observability half of the selective-scan path, so a user can
         SEE that a point lookup skipped 9,990 of 10,000 files — and on
         which stats — before paying for the scan. Returns one row per

@@ -1311,14 +1311,19 @@ def maintain_join_chain_view_changelog(
     distinct_col: str | None = None,
     max_files_per_trigger: int | None = None,
     view_keep_last: int = 50,
+    metric_col: str | None = None,
+    id_cols: list[str] | str | None = None,
+    k: int | None = None,
 ):
     """Streaming wrapper around :func:`refresh_join_chain_view`: a
     UNION of ALL chain tables' commit-marker feeds drives discovery,
     so a commit on any side wakes a fold with the usual
-    fold-to-heads / replay-no-op semantics."""
+    fold-to-heads / replay-no-op semantics. View kinds as in
+    :func:`refresh_join_chain_view`, top-k included."""
     kinds = dict(
         sum_cols=sum_cols, moment_cols=moment_cols, minmax_cols=minmax_cols,
-        distinct_col=distinct_col,
+        distinct_col=distinct_col, metric_col=metric_col, id_cols=id_cols,
+        k=k,
     )
 
     def do_refresh():
@@ -1352,22 +1357,16 @@ def maintain_topk_join_view_changelog(
     max_files_per_trigger: int | None = None,
     view_keep_last: int = 50,
 ):
-    """Streaming wrapper around :func:`refresh_topk_join_view`: the
-    joined leaderboard stays fresh off the UNION of both sources'
-    commit-marker feeds, with the same fold-to-head / replay-no-op
-    semantics as the other changelog maintainers."""
-
-    def do_refresh():
-        return refresh_topk_join_view(
-            spark, catalog, a_database, a_table, b_database, b_table,
-            view_database, view_table, on, keys, metric_col, id_cols, k,
-        )
-
-    return _marker_feed_maintainer(
-        spark, catalog,
-        [catalog.table(a_database, a_table), catalog.table(b_database, b_table)],
-        do_refresh, view_database, view_table,
-        checkpoint_dir, max_files_per_trigger, view_keep_last,
+    """Streaming wrapper around :func:`refresh_topk_join_view`:
+    :func:`maintain_join_chain_view_changelog`'s top-k kind with
+    ``tables=[A, B]`` and ``ons=[on]`` — the joined leaderboard stays
+    fresh off the UNION of both sources' commit-marker feeds."""
+    return maintain_join_chain_view_changelog(
+        spark, catalog, [(a_database, a_table), (b_database, b_table)],
+        view_database, view_table, [on], keys, checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger,
+        view_keep_last=view_keep_last, metric_col=metric_col,
+        id_cols=id_cols, k=k,
     )
 
 

@@ -153,46 +153,42 @@ def test_scan_report_names_pruning_reasons(spark, tmp_path):
     assert {r["reason"] for r in rep2} == {"bounds:id"}
 
 
-def test_plan_files_dist_matches_driver(spark, tmp_path):
-    """Verdict r8 #7: the distributed planning path must reproduce
-    the driver walk's decisions exactly — bounds, bloom, and bucket
-    pruning — on a real table with all three stat kinds."""
-    cat = _mk(spark, tmp_path)
-    tbl = cat.table("db", "t")
-    for preds in [
-        [("id", "=", 4)],
-        [("name", "=", "u7")],
-        [("id", "<", 10)],
-        [("id", ">=", 150), ("name", "=", "u151")],
-        [("id", "=", 99999)],  # absent everywhere
-        [("id", ">", 0)],      # keeps everything
-    ]:
-        drv = {f.path for f in tbl.plan_files(preds)}
-        dist = {f.path for f in tbl.plan_files_dist(spark, preds)}
-        assert dist == drv, f"mismatch for {preds}: {dist ^ drv}"
+def test_plan_files_hashes_each_point_literal_once(spark, tmp_path, monkeypatch):
+    """The literal's xxhash64 does not depend on the file: one point
+    predicate on a bloom-and-bucket table hashes once, however many
+    files the planner probes."""
+    from apache_iceberg_tables_migration_tool_spark.functions import xxh64
 
-
-def test_plan_files_dist_matches_on_bucketed_table(spark, tmp_path):
-    cat = SnapCatalog(str(tmp_path / "whb"))
-    cat.create_table("db", "b", "id bigint, v bigint", partition_by=["bucket(8, id)"])
-    df = spark.range(0, 400).select("id", (F.col("id") * 3).alias("v"))
-    cat.write("db", "b", df)
+    cat = SnapCatalog(str(tmp_path / "whh"))
+    cat.create_table(
+        "db", "b", "id bigint, v bigint", partition_by=["bucket(4, id)"],
+        properties={"bloom.columns": "id"},
+    )
+    cat.write("db", "b", spark.range(0, 400).select(
+        "id", (F.col("id") * 3).alias("v")).repartition(8))
     tbl = cat.table("db", "b")
-    for v in [0, 7, 123, 399]:
-        preds = [("id", "=", v)]
-        drv = {f.path for f in tbl.plan_files(preds)}
-        dist = {f.path for f in tbl.plan_files_dist(spark, preds)}
-        assert dist == drv
+    files = tbl.current_snapshot().files
+    assert len(files) >= 20 and all(f.blooms for f in files)
+    calls = []
+    real = xxh64.spark_xxhash64
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(xxh64, "spark_xxhash64", counting)
+    kept = tbl.plan_files([("id", "=", 17)])
+    assert len(calls) == 1
+    assert 0 < len(kept) < len(files)
+    bucket = xxh64.xxh64_long(17) % 4
+    assert all(f"id_bucket={bucket}" in f.path for f in kept)
 
 
 def test_plan_files_dist_many_files_synthetic(spark, tmp_path):
-    """Equivalence + threshold routing at ≥10⁴ files: fabricate a
-    10,000-file manifest (planning touches only metadata, no data
-    files needed) and check the distributed plan picks the same file
-    set the driver walk does."""
+    """Planning at ≥10⁴ files: fabricate a 10,000-file manifest
+    (planning touches only metadata, no data files needed) and check
+    the planner keeps exactly the files the range spans."""
     import time
-
-    from apache_iceberg_tables_migration_tool_spark.sources import snapcat as SC
 
     cat = SnapCatalog(str(tmp_path / "whm"))
     cat.create_table("db", "m", "id bigint, v bigint")
@@ -214,13 +210,5 @@ def test_plan_files_dist_many_files_synthetic(spark, tmp_path):
     t0 = time.monotonic()
     drv = {f.path for f in tbl.plan_files(preds)}
     t_drv = time.monotonic() - t0
-    t0 = time.monotonic()
-    dist = {f.path for f in tbl.plan_files_dist(spark, preds)}
-    t_dist = time.monotonic() - t0
-    assert dist == drv
     assert len(drv) == 3  # 500_000..500_299 spans files 5000..5002
-    print(f"plan 10k files: driver={t_drv:.3f}s dist={t_dist:.3f}s")
-
-    # threshold is calibrated from this measurement (see PERFORMANCE.md):
-    # dist carries ~3 s of fixed job overhead, so the switch sits at 10^5
-    assert SC.SnapTable.PLAN_DIST_THRESHOLD == 100_000
+    print(f"plan 10k files: {t_drv:.3f}s")

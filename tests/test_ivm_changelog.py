@@ -1207,42 +1207,45 @@ def test_join_chain_view_rejects_ambiguous_columns(spark, tmp_path):
 
 def test_maintain_join_chain_view_changelog_stream(spark, tmp_path):
     """Streaming chain maintenance: a commit on the FACT end of a
-    3-table chain wakes a fold through the union marker feed."""
+    3-table chain wakes a fold through the union marker feed, for an
+    aggregate view and for a top-k view alike."""
     from apache_iceberg_tables_migration_tool_spark.streaming.pipelines import (
         maintain_join_chain_view_changelog,
     )
 
-    cat = SnapCatalog(str(tmp_path / "wh"))
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
+    def drain(cat, ckpt, kind):
         maintain_join_chain_view_changelog(
             spark, cat, [("db", "cust"), ("db", "ords"), ("db", "items")],
             "db", "chainv", ons=[["ck"], ["ok"]], keys=["nat"],
-            sum_cols=["qty"], checkpoint_dir=ckpt,
+            checkpoint_dir=ckpt, **kind,
         ).awaitTermination()
 
-    cat.write("db", "cust", spark.createDataFrame(
-        [(1, "x")], "ck long, nat string"))
-    cat.write("db", "ords", spark.createDataFrame(
-        [(1, 10)], "ck long, ok long"))
-    cat.write("db", "items", spark.createDataFrame(
-        [(10, 3)], "ok long, qty long"))
-    drain()
-    vt = cat.table("db", "chainv")
-    got = {r["nat"]: (r["group_count"], r["sum_qty"])
-           for r in vt.read(spark).collect()}
-    assert got == {"x": (1, 3)}
-    cat.write("db", "items", spark.createDataFrame(
-        [(10, 5)], "ok long, qty long"))
-    drain()
-    got = {r["nat"]: (r["group_count"], r["sum_qty"])
-           for r in vt.read(spark).collect()}
-    assert got == {"x": (2, 8)}
-    drain()  # idempotent
-    got = {r["nat"]: (r["group_count"], r["sum_qty"])
-           for r in vt.read(spark).collect()}
-    assert got == {"x": (2, 8)}
+    cases = [  # (view kind, view row as a tuple, view after each fold)
+        (dict(sum_cols=["qty"]),
+         lambda r: (r["nat"], r["group_count"], r["sum_qty"]),
+         {("x", 1, 3)}, {("x", 2, 8)}),
+        (dict(metric_col="qty", id_cols=["ok", "ln"], k=1),
+         lambda r: (r["nat"], r["ok"], r["ln"], r["rk"]),
+         {("x", 10, 1, 1)}, {("x", 10, 2, 1)}),
+    ]
+    for i, (kind, row, first, second) in enumerate(cases):
+        cat = SnapCatalog(str(tmp_path / f"wh{i}"))
+        ckpt = str(tmp_path / f"ckpt{i}")
+        cat.write("db", "cust", spark.createDataFrame(
+            [(1, "x")], "ck long, nat string"))
+        cat.write("db", "ords", spark.createDataFrame(
+            [(1, 10)], "ck long, ok long"))
+        cat.write("db", "items", spark.createDataFrame(
+            [(10, 1, 3)], "ok long, ln long, qty long"))
+        drain(cat, ckpt, kind)
+        vt = cat.table("db", "chainv")
+        assert {row(r) for r in vt.read(spark).collect()} == first
+        cat.write("db", "items", spark.createDataFrame(
+            [(10, 2, 5)], "ok long, ln long, qty long"))
+        drain(cat, ckpt, kind)
+        assert {row(r) for r in vt.read(spark).collect()} == second
+        drain(cat, ckpt, kind)  # idempotent
+        assert {row(r) for r in vt.read(spark).collect()} == second
 
 
 def test_join_chain_view_tracked_rename_fails_loud(spark, tmp_path):

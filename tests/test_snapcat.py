@@ -1498,6 +1498,29 @@ def test_plan_files_prunes_on_partition_column(spark, cat):
     assert got == [i for i in range(30) if i % 3 == 0]
 
 
+def test_read_where_builds_data_files_only_for_kept_files(spark, cat, monkeypatch):
+    """A point lookup plans over raw manifest entries: only the kept
+    file becomes a ``DataFile`` — neither the planner nor the scan's
+    delete-file lookup builds one per data file of the snapshot."""
+    from apache_iceberg_tables_migration_tool_spark.sources import snapcat as SC
+
+    cat.write("db", "t", spark.range(0, 400).repartitionByRange(40, "id"),
+              committed_at=T[0])
+    tbl = cat.table("db", "t")
+    assert len(tbl.current_snapshot().files) >= 30
+    built = []
+
+    class CountingDataFile(SC.DataFile):
+        def __init__(self, *args, **kwargs):
+            built.append(kwargs.get("path"))
+            super().__init__(*args, **kwargs)
+
+    monkeypatch.setattr(SC, "DataFile", CountingDataFile)
+    rows = tbl.read_where(spark, [("id", "=", 123)]).collect()
+    assert [r["id"] for r in rows] == [123]
+    assert len(built) == 1
+
+
 def test_alter_partition_spec_lifecycle(spark, cat):
     """Explicit spec evolution: metadata-only commit; future writes lay
     out under the new spec; mixed layouts read correctly and each file
@@ -2354,9 +2377,6 @@ def test_inline_legacy_metadata_upgrades_on_next_commit(spark, cat):
     # reads work straight off the inline format
     assert tbl.read(spark).count() == 50
     assert {f.path for f in tbl.plan_files([("id", "<", 10)])}
-    # dist planning falls back (no chunks) and still matches
-    drv = {f.path for f in tbl.plan_files([("id", "<", 10)])}
-    assert {f.path for f in tbl.plan_files_dist(spark, [("id", "<", 10)])} == drv
 
     # next commit upgrades the whole log to chunk refs
     cat.write("db", "legacy", df, mode="append")
